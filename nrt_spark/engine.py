@@ -1,16 +1,24 @@
 """The distributed fit/monitor engine.
 
 Spark-first re-expression of the reference's fit -> monitor -> report
-lifecycle (nrt/monitor/__init__.py):
+lifecycle (nrt/monitor/__init__.py).  Each step is ONE per-bucket
+pure-pandas function over the same (M, K) matrix the reference
+vectorizes over (``__init__.py:192``), so the numpy kernels are shared
+verbatim with the single-process oracle:
 
-- ``fit``: one shuffle on the bucket key, then one grouped-map pandas UDF
-  per bucket; inside the UDF the bucket's series form the same (M, K)
-  matrix the reference vectorizes over (``__init__.py:192``), so the
-  numpy kernels are shared verbatim with the single-process oracle.
-- ``monitor``: a *cogrouped* pandas UDF (state bucket x observation
-  bucket) — one shuffle per side, no separate join stage — folding new
-  acquisitions through the sequential process update in timestamp order.
-- ``report``: plain projection of the state table.
+- :func:`fit_bucket`: token rows -> state rows (band-aware, history cut
+  on the positional grid);
+- :func:`advance_bucket`: state rows + dense ``(y, days, new_last)`` ->
+  new state rows (``last_day`` late-data mask, ``run_monitor``).
+
+The entry points only build their input: ``fit``/``fit_monitor`` as a
+grouped UDF after one shuffle on the bucket key; ``monitor`` (tokens on
+the token grid, :func:`dense_from_tokens`) and ``monitor_obs``
+(long-form points on the observed days, :func:`dense_from_obs`, shared
+with the streaming operator) as a *cogrouped* UDF — one shuffle per
+side, no join stage; ``fit_bucketed``/``monitor_bucketed`` as
+``range(B) -> mapInPandas`` over bucket-partitioned files, no Exchange.
+``report`` is a plain projection of the state table.
 
 Scale design: ``doc_id`` is hash-bucketed (``pmod(xxhash64(doc_id), B)``),
 which (a) bounds the pandas group size to ~n_docs/B series regardless of
@@ -34,11 +42,18 @@ from nrt_spark.kernels.monitors import fit_state, resolve_params, run_monitor
 from nrt_spark.state import STATE_SCHEMA, STATE_COLUMNS, pdf_to_state, state_to_pdf
 from nrt_spark.tokens import grid_days, tokens_to_matrix
 
+#: band columns the CCDC_RIRLS screen reads beside ``tokens``
+BANDS = ["green_tokens", "swir_tokens"]
+
 
 def _day_number(date_str: str | None) -> int | None:
     if date_str is None:
         return None
     return int(np.datetime64(date_str, "D").astype(int))
+
+
+def _needs_bands(params: dict) -> bool:
+    return params.get("screen_outliers") == "CCDC_RIRLS"
 
 
 def with_bucket(df: DataFrame, num_buckets: int) -> DataFrame:
@@ -62,39 +77,165 @@ def write_tokens_bucketed(tokens_df: DataFrame, path: str,
      .write.partitionBy("bucket").mode("overwrite").parquet(path))
 
 
-def _monitor_step(state_pdf: pd.DataFrame, toks_pdf: pd.DataFrame,
-                  params: dict, update_mask: bool) -> pd.DataFrame:
-    """One bucket's monitor advance on full-series token rows — shared
-    by the cogrouped path and the storage-partitioned fastpath (must
-    stay byte-identical between them; see test_engine parity tests)."""
+def fit_bucket(toks: pd.DataFrame, bucket: int, params: dict,
+               history_end_day: int | None = None,
+               update_mask: bool | None = None) -> pd.DataFrame:
+    """One bucket's fit: token rows -> state rows.
+
+    Rows are ordered by doc_id and decoded onto the positional grid; the
+    band matrices ride along when the CCDC_RIRLS screen needs them.
+    ``history_end_day`` (inclusive) cuts the grid to the history period,
+    and ``last_day`` is the end of the fitted grid.  With ``update_mask``
+    set (``fit_monitor``'s single pass), the rows after the cut are then
+    folded through ``run_monitor`` on the fitted kernel state — no
+    state-row round trip — and ``last_day`` is the end of the full grid.
+    """
+    if not len(toks):
+        return pd.DataFrame(columns=STATE_COLUMNS)
+    toks = toks.sort_values("doc_id").reset_index(drop=True)
+    y = tokens_to_matrix(list(toks["tokens"]))
+    days = grid_days(y.shape[0])
+    green = swir = None
+    if _needs_bands(params):
+        green, swir = (tokens_to_matrix(list(toks[c]), max_len=y.shape[0])
+                       for c in BANDS)
+    fit_y, fit_days = y, days
+    if history_end_day is not None:
+        hist = days <= history_end_day
+        fit_y, fit_days = y[hist], days[hist]
+        if green is not None:
+            green, swir = green[hist], swir[hist]
+    state = fit_state(fit_y, fit_days, params, green=green, swir=swir)
+    if update_mask is not None:
+        # the cut is a prefix of the ascending grid
+        n = len(fit_days)
+        run_monitor(state, y[n:], days[n:], params, update_mask=update_mask)
+        fit_days = days
+    last = np.full(len(toks), int(fit_days[-1]) if len(fit_days) else 0)
+    return state_to_pdf(state, toks["doc_id"].to_numpy(), bucket, last)
+
+
+def advance_bucket(state_pdf: pd.DataFrame, y: np.ndarray, days: np.ndarray,
+                   new_last: np.ndarray, bucket: int, params: dict,
+                   update_mask: bool = True) -> pd.DataFrame:
+    """One bucket's monitor advance: state rows + dense observations ->
+    new state rows.
+
+    ``y`` is (D, K) with its columns in ``state_pdf`` row order, ``days``
+    its ascending (D,) day grid and ``new_last`` the (K,) post-advance
+    ``last_day``.  Observations at or before a series' ``last_day``
+    behave exactly like NaN gaps (reference W8 semantics), so a re-run
+    is a no-op.  Empty state yields no rows; no observation days return
+    the state unchanged.  ``y`` is overwritten.
+    """
     if not len(state_pdf):
         return pd.DataFrame(columns=STATE_COLUMNS)
-    state_pdf = state_pdf.sort_values("doc_id").reset_index(drop=True)
-    if not len(toks_pdf):
+    if not len(days):
         return state_pdf[STATE_COLUMNS]
-    if toks_pdf["doc_id"].duplicated().any():
-        dupes = toks_pdf["doc_id"][toks_pdf["doc_id"].duplicated()]
-        raise ValueError(
-            "monitor() expects one token row per doc_id per call; "
-            f"duplicates include {sorted(set(dupes))[:3]}")
-    toks_pdf = (toks_pdf.set_index("doc_id")["tokens"]
-                .reindex(state_pdf["doc_id"]))
-    token_lists = [t if t is not None and not (isinstance(t, float))
-                   else [] for t in toks_pdf]
-    y = tokens_to_matrix(token_lists)
-    days = grid_days(y.shape[0])
     last_day = state_pdf["last_day"].to_numpy(dtype=np.int64, na_value=0)
-    # observations at or before last_day behave exactly like NaN
-    # gaps (reference W8 semantics) -> incremental/idempotent
     y[days[:, None] <= last_day[None, :]] = np.nan
     state = pdf_to_state(state_pdf)
     run_monitor(state, y, days, params, update_mask=update_mask)
+    return state_to_pdf(state, state_pdf["doc_id"].to_numpy(), bucket,
+                        new_last)
+
+
+def dense_from_tokens(state_pdf: pd.DataFrame, toks: pd.DataFrame):
+    """Full-series ``(doc_id, tokens)`` rows reindexed onto the state's
+    doc_ids, on the token grid -> ``(y, days, new_last)``.  A series
+    without a token row is all gaps; each series' ``last_day`` moves to
+    the end of its own token row."""
+    dupes = toks["doc_id"][toks["doc_id"].duplicated()]
+    if len(dupes):
+        raise ValueError(
+            "monitor() expects one token row per doc_id per call; "
+            f"duplicates include {sorted(set(dupes))[:3]}")
+    tokens = toks.set_index("doc_id")["tokens"].reindex(state_pdf["doc_id"])
+    token_lists = [t if t is not None and not isinstance(t, float) else []
+                   for t in tokens]
+    y = tokens_to_matrix(token_lists)
     new_last = np.maximum(
-        last_day,
+        state_pdf["last_day"].to_numpy(dtype=np.int64, na_value=0),
         np.array([grid_days(len(t))[-1] if len(t) else 0
                   for t in token_lists]))
-    return state_to_pdf(state, state_pdf["doc_id"].to_numpy(),
-                        int(state_pdf["bucket"].iloc[0]), new_last)
+    return y, grid_days(y.shape[0]), new_last
+
+
+def dense_from_obs(state_pdf: pd.DataFrame, obs: pd.DataFrame):
+    """Long-form ``(doc_id, day, value)`` rows scattered onto the
+    observed days -> ``(y, days, new_last)``.  Rows for doc_ids outside
+    the state are dropped.  Only series observed here advance their
+    ``last_day``: a batch-wide max would mask other series'
+    later-arriving earlier observations as late."""
+    # duplicate (doc, day) rows: the scatter below is last-write-wins,
+    # so order the rows deterministically (max value wins; NaN loses) —
+    # arrival order depends on partition layout and must not decide
+    obs = obs.sort_values(["day", "value"], na_position="first",
+                          kind="mergesort")
+    days = np.sort(obs["day"].unique()).astype(np.int64)
+    y = np.full((len(days), len(state_pdf)), np.nan)
+    # one vectorized scatter instead of a per-observation Python loop
+    # (the only per-point Python between scan and sink on the
+    # incremental path)
+    doc_idx = pd.Index(state_pdf["doc_id"]).get_indexer(obs["doc_id"])
+    keep = doc_idx >= 0
+    obs_day = obs["day"].to_numpy(dtype=np.int64)
+    vals = obs["value"].to_numpy(dtype=np.float64)
+    # fancy assignment writes rows in order, so with duplicate
+    # (day, doc) pairs the LAST row — the deterministic max — wins
+    y[np.searchsorted(days, obs_day)[keep], doc_idx[keep]] = vals[keep]
+    new_last = state_pdf["last_day"].to_numpy(dtype=np.int64, na_value=0,
+                                              copy=True)
+    np.maximum.at(new_last, doc_idx[keep], obs_day[keep])
+    return y, days, new_last
+
+
+def _read_bucket(path: str, bucket: int, columns: list) -> pd.DataFrame:
+    """One bucket's rows of a table partitioned on ``bucket`` (local or
+    shared filesystem via pyarrow; no SparkSession on executors).  An
+    empty hash cell — no directory, or one without parquet files —
+    has no rows."""
+    import pyarrow.parquet as pq
+
+    files = sorted(str(f) for f in
+                   (Path(path) / f"bucket={bucket}").glob("*.parquet"))
+    if not files:
+        return pd.DataFrame(columns=columns)
+    return pq.read_table(files, columns=columns).to_pandas()
+
+
+def _load_bucket_state(state_path: str, bucket: int) -> pd.DataFrame:
+    """One bucket's rows of a bucket-partitioned state snapshot
+    (``NrtEngine.save_state``), ordered by doc_id."""
+    pdf = _read_bucket(state_path, bucket,
+                       [c for c in STATE_COLUMNS if c != "bucket"])
+    pdf["bucket"] = bucket
+    return pdf[STATE_COLUMNS].sort_values("doc_id").reset_index(drop=True)
+
+
+def _bucketed_columns(tokens_path: str) -> list:
+    import pyarrow.parquet as pq
+
+    sample = next(iter(Path(tokens_path).glob("bucket=*/*.parquet")), None)
+    if sample is None:
+        raise FileNotFoundError(
+            f"no bucketed parquet files under {tokens_path} "
+            "(expected bucket=*/...parquet from write_tokens_bucketed)")
+    return pq.read_schema(sample).names
+
+
+def _fit_columns(params: dict, table_columns) -> list:
+    """The token columns a fit reads.  The band arrays ride along only
+    when the screen needs them (they double the shuffle volume); a
+    missing band column is checked on the DRIVER against
+    ``table_columns()`` — an immediate ValueError, not an opaque
+    field-not-found inside a Spark task."""
+    if not _needs_bands(params):
+        return ["doc_id", "tokens"]
+    if not set(BANDS) <= set(table_columns()):
+        raise ValueError("CCDC_RIRLS screen requires green_tokens and "
+                         "swir_tokens columns in the token table")
+    return ["doc_id", "tokens", *BANDS]
 
 
 class NrtEngine:
@@ -140,6 +281,49 @@ class NrtEngine:
         return max(2 * p, -(-n_docs // docs_per_bucket))
 
     # ------------------------------------------------------------------
+    def _fit_grouped(self, tokens_df: DataFrame, he_day: int | None,
+                     update_mask: bool | None) -> DataFrame:
+        params = self.params
+        cols = _fit_columns(params, lambda: tokens_df.columns)
+
+        def fit_fn(key, pdf):
+            return fit_bucket(pdf, int(key[0]), params, he_day, update_mask)
+
+        bucketed = with_bucket(tokens_df.select(*cols), self.num_buckets)
+        return bucketed.groupBy("bucket").applyInPandas(fit_fn, STATE_SCHEMA)
+
+    def _cogroup(self, state_df: DataFrame, rows_df: DataFrame, dense,
+                 update_mask: bool) -> DataFrame:
+        """Advance each state bucket on ``dense(state_pdf, rows_pdf)``,
+        with ``rows_df`` cogrouped by bucket."""
+        params = self.params
+
+        def step_fn(key, state_pdf, rows_pdf):
+            state_pdf = state_pdf.sort_values("doc_id").reset_index(drop=True)
+            return advance_bucket(state_pdf, *dense(state_pdf, rows_pdf),
+                                  int(key[0]), params, update_mask)
+
+        rows = with_bucket(rows_df, self.num_buckets)
+        return state_df.groupBy("bucket").cogroup(
+            rows.groupBy("bucket")).applyInPandas(step_fn, STATE_SCHEMA)
+
+    def _map_buckets(self, per_bucket) -> DataFrame:
+        """``range(B) -> mapInPandas``: each task yields
+        ``per_bucket(b)`` for its bucket ids — NO Exchange anywhere
+        (pinned in tests/test_plan_shapes.py)."""
+
+        def gen(batches):
+            for pdf in batches:
+                for b in pdf["id"]:
+                    out = per_bucket(int(b))
+                    if len(out):
+                        yield out
+
+        buckets = self.spark.range(0, self.num_buckets, 1,
+                                   numPartitions=self.num_buckets)
+        return buckets.mapInPandas(gen, STATE_SCHEMA)
+
+    # ------------------------------------------------------------------
     def fit(self, tokens_df: DataFrame, history_end: str | None = None
             ) -> DataFrame:
         """Fit history models for every series; returns the state table.
@@ -149,43 +333,8 @@ class NrtEngine:
         ``monitor``.  The cut happens inside the UDF on the positional
         grid, so no explode/join is needed.
         """
-        params = self.params
-        he_day = _day_number(history_end)
-        needs_bands = params.get("screen_outliers") == "CCDC_RIRLS"
-        if needs_bands and "green_tokens" not in tokens_df.columns:
-            raise ValueError("CCDC_RIRLS screen requires green_tokens and "
-                             "swir_tokens columns in the token table")
+        return self._fit_grouped(tokens_df, _day_number(history_end), None)
 
-        def fit_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            if not len(pdf):
-                return pd.DataFrame(columns=STATE_COLUMNS)
-            pdf = pdf.sort_values("doc_id").reset_index(drop=True)
-            y = tokens_to_matrix(list(pdf["tokens"]))
-            days = grid_days(y.shape[0])
-            green = swir = None
-            if needs_bands:
-                green = tokens_to_matrix(list(pdf["green_tokens"]),
-                                         max_len=y.shape[0])
-                swir = tokens_to_matrix(list(pdf["swir_tokens"]),
-                                        max_len=y.shape[0])
-            if he_day is not None:
-                keep = days <= he_day
-                y, days = y[keep], days[keep]
-                if needs_bands:
-                    green, swir = green[keep], swir[keep]
-            state = fit_state(y, days, params, green=green, swir=swir)
-            last = np.full(len(pdf), int(days[-1]) if len(days) else 0)
-            return state_to_pdf(state, pdf["doc_id"].to_numpy(),
-                                int(pdf["bucket"].iloc[0]), last)
-
-        # shuffle only what the UDF reads (band arrays double the shuffle
-        # volume; keep them out unless the screen needs them)
-        cols = ["doc_id", "tokens"] + (
-            ["green_tokens", "swir_tokens"] if needs_bands else [])
-        bucketed = with_bucket(tokens_df.select(*cols), self.num_buckets)
-        return bucketed.groupBy("bucket").applyInPandas(fit_fn, STATE_SCHEMA)
-
-    # ------------------------------------------------------------------
     def fit_monitor(self, tokens_df: DataFrame, history_end: str,
                     update_mask: bool = True) -> DataFrame:
         """Fit on the history window and monitor the remainder in ONE
@@ -197,30 +346,11 @@ class NrtEngine:
         backfill/reprocessing).  The two-phase path remains for
         incremental arrivals.
         """
-        params = self.params
         he_day = _day_number(history_end)
         if he_day is None:
             raise ValueError("history_end is required for fit_monitor")
+        return self._fit_grouped(tokens_df, he_day, update_mask)
 
-        def fm_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            if not len(pdf):
-                return pd.DataFrame(columns=STATE_COLUMNS)
-            pdf = pdf.sort_values("doc_id").reset_index(drop=True)
-            y = tokens_to_matrix(list(pdf["tokens"]))
-            days = grid_days(y.shape[0])
-            hist = days <= he_day
-            state = fit_state(y[hist], days[hist], params)
-            run_monitor(state, y[~hist], days[~hist], params,
-                        update_mask=update_mask)
-            last = np.full(len(pdf), int(days[-1]) if len(days) else 0)
-            return state_to_pdf(state, pdf["doc_id"].to_numpy(),
-                                int(pdf["bucket"].iloc[0]), last)
-
-        bucketed = with_bucket(tokens_df.select("doc_id", "tokens"),
-                               self.num_buckets)
-        return bucketed.groupBy("bucket").applyInPandas(fm_fn, STATE_SCHEMA)
-
-    # ------------------------------------------------------------------
     def monitor(self, state_df: DataFrame, tokens_df: DataFrame,
                 update_mask: bool = True) -> DataFrame:
         """Advance state with all observations newer than each series'
@@ -231,17 +361,23 @@ class NrtEngine:
         sequential update in time order (vectorized across the bucket's
         series, sequential over time — the reference's axis order).
         """
-        params = self.params
+        return self._cogroup(state_df, tokens_df.select("doc_id", "tokens"),
+                             dense_from_tokens, update_mask)
 
-        def step_fn(state_pdf: pd.DataFrame, toks_pdf: pd.DataFrame
-                    ) -> pd.DataFrame:
-            return _monitor_step(state_pdf, toks_pdf, params, update_mask)
-
-        toks = with_bucket(tokens_df.select("doc_id", "tokens"),
-                           self.num_buckets)
-        state_g = state_df.groupBy("bucket")
-        return state_g.cogroup(toks.groupBy("bucket")).applyInPandas(
-            step_fn, STATE_SCHEMA)
+    def monitor_obs(self, state_df: DataFrame, obs_df: DataFrame,
+                    update_mask: bool = True) -> DataFrame:
+        """Advance state with *long-form* observations
+        ``(doc_id string, ts timestamp | day int, value double)`` — the
+        shape incremental ingest delivers at scale (new acquisitions
+        arrive as points, not re-shipped full series).  Semantics are
+        identical to :meth:`monitor` (same kernels, same ``last_day``
+        late-data masking); shares its input scatter with the streaming
+        operator."""
+        if "day" not in obs_df.columns:
+            obs_df = obs_df.withColumn(
+                "day", F.datediff("ts", F.lit("1970-01-01")))
+        return self._cogroup(state_df, obs_df.select("doc_id", "day", "value"),
+                             dense_from_obs, update_mask)
 
     # ------------------------------------------------------------------
     def fit_bucketed(self, tokens_path: str, history_end: str | None = None
@@ -250,72 +386,16 @@ class NrtEngine:
         (written by :func:`write_tokens_bucketed`, or any Iceberg
         ``bucket(N, doc_id)`` layout on a shared filesystem).
 
-        The plan is ``range(B) -> mapInPandas`` — NO Exchange anywhere
-        (pinned in tests/test_plan_shapes.py): each task reads exactly
-        its bucket's parquet files and runs the same kernels as
+        The plan is ``range(B) -> mapInPandas``: each task reads exactly
+        its bucket's parquet files and runs :func:`fit_bucket` like
         :meth:`fit`, so the result is byte-identical.  This is the
         cluster-shape the docstring at the top of this module promises:
         pay the bucket shuffle once at ingest, never per pass.
         """
-        params = self.params
-        he_day = _day_number(history_end)
-        needs_bands = params.get("screen_outliers") == "CCDC_RIRLS"
-        cols = ["doc_id", "tokens"] + (
-            ["green_tokens", "swir_tokens"] if needs_bands else [])
-        if needs_bands:
-            # validate on the DRIVER like fit() does — a missing band
-            # column should be an immediate ValueError, not an opaque
-            # pyarrow field-not-found inside a Spark task
-            import pyarrow.parquet as pq
-
-            sample = next(iter(Path(tokens_path).glob("bucket=*/*.parquet")),
-                          None)
-            if sample is None:
-                raise FileNotFoundError(
-                    f"no bucketed parquet files under {tokens_path} "
-                    "(expected bucket=*/...parquet from "
-                    "write_tokens_bucketed)")
-            schema_cols = set(pq.read_schema(sample).names)
-            if not {"green_tokens", "swir_tokens"} <= schema_cols:
-                raise ValueError(
-                    "CCDC_RIRLS screen requires green_tokens and "
-                    "swir_tokens columns in the bucketed token table")
-
-        def fit_gen(batches):
-            import pyarrow.parquet as pq
-            for pdf in batches:
-                for b in pdf["id"]:
-                    part = f"{tokens_path}/bucket={int(b)}"
-                    try:
-                        toks = pq.read_table(part, columns=cols).to_pandas()
-                    except FileNotFoundError:
-                        continue
-                    if not len(toks):
-                        continue
-                    toks = toks.sort_values("doc_id").reset_index(drop=True)
-                    y = tokens_to_matrix(list(toks["tokens"]))
-                    days = grid_days(y.shape[0])
-                    green = swir = None
-                    if needs_bands:
-                        green = tokens_to_matrix(list(toks["green_tokens"]),
-                                                 max_len=y.shape[0])
-                        swir = tokens_to_matrix(list(toks["swir_tokens"]),
-                                                max_len=y.shape[0])
-                    if he_day is not None:
-                        keep = days <= he_day
-                        y, days = y[keep], days[keep]
-                        if needs_bands:
-                            green, swir = green[keep], swir[keep]
-                    state = fit_state(y, days, params, green=green,
-                                      swir=swir)
-                    last = np.full(len(toks),
-                                   int(days[-1]) if len(days) else 0)
-                    yield state_to_pdf(state, toks["doc_id"].to_numpy(),
-                                       int(b), last)
-
-        buckets = self.spark.range(0, self.num_buckets, 1,
-                                   numPartitions=self.num_buckets)
-        return buckets.mapInPandas(fit_gen, STATE_SCHEMA)
+        params, he_day = self.params, _day_number(history_end)
+        cols = _fit_columns(params, lambda: _bucketed_columns(tokens_path))
+        return self._map_buckets(lambda b: fit_bucket(
+            _read_bucket(tokens_path, b, cols), b, params, he_day))
 
     def monitor_bucketed(self, state_path: str, tokens_path: str,
                          update_mask: bool = True) -> DataFrame:
@@ -326,64 +406,19 @@ class NrtEngine:
         sequential update.  No Exchange, no cogroup, no join in the
         plan; on a real cluster this is the storage-partitioned join
         Iceberg's bucket transform enables, expressed directly.
-        Byte-identical to :meth:`monitor` (shared ``_monitor_step``).
+        Byte-identical to :meth:`monitor` (same input, same
+        :func:`advance_bucket`).
         """
         params = self.params
 
-        def mon_gen(batches):
-            import pyarrow.parquet as pq
+        def advance(b: int) -> pd.DataFrame:
+            state_pdf = _load_bucket_state(state_path, b)
+            toks = _read_bucket(tokens_path, b, ["doc_id", "tokens"])
+            y, days, new_last = dense_from_tokens(state_pdf, toks)
+            return advance_bucket(state_pdf, y, days, new_last, b, params,
+                                  update_mask)
 
-            from nrt_spark.streaming import _load_bucket_state
-            for pdf in batches:
-                for b in pdf["id"]:
-                    state_pdf = _load_bucket_state(state_path, int(b))
-                    if state_pdf is None or not len(state_pdf):
-                        continue
-                    try:
-                        toks = pq.read_table(
-                            f"{tokens_path}/bucket={int(b)}",
-                            columns=["doc_id", "tokens"]).to_pandas()
-                    except FileNotFoundError:
-                        toks = pd.DataFrame(columns=["doc_id", "tokens"])
-                    yield _monitor_step(state_pdf, toks, params,
-                                        update_mask)
-
-        buckets = self.spark.range(0, self.num_buckets, 1,
-                                   numPartitions=self.num_buckets)
-        return buckets.mapInPandas(mon_gen, STATE_SCHEMA)
-
-    # ------------------------------------------------------------------
-    def monitor_obs(self, state_df: DataFrame, obs_df: DataFrame,
-                    update_mask: bool = True) -> DataFrame:
-        """Advance state with *long-form* observations
-        ``(doc_id string, ts timestamp | day int, value double)`` — the
-        shape incremental ingest delivers at scale (new acquisitions
-        arrive as points, not re-shipped full series).  Semantics are
-        identical to :meth:`monitor` (same kernels, same ``last_day``
-        late-data masking); shares its advance step with the streaming
-        operator."""
-        from nrt_spark.streaming import _advance
-
-        params = self.params
-        if "day" not in obs_df.columns:
-            obs_df = obs_df.withColumn(
-                "day", F.datediff("ts", F.lit("1970-01-01")))
-        obs = with_bucket(obs_df.select("doc_id", "day", "value"),
-                          self.num_buckets)
-
-        def step_fn(state_pdf: pd.DataFrame, obs_pdf: pd.DataFrame
-                    ) -> pd.DataFrame:
-            if not len(state_pdf):
-                return pd.DataFrame(columns=STATE_COLUMNS)
-            state_pdf = state_pdf.sort_values("doc_id").reset_index(drop=True)
-            if not len(obs_pdf):
-                return state_pdf[STATE_COLUMNS]
-            return _advance(state_pdf, obs_pdf, params,
-                            int(state_pdf["bucket"].iloc[0]),
-                            update_mask=update_mask)
-
-        return state_df.groupBy("bucket").cogroup(
-            obs.groupBy("bucket")).applyInPandas(step_fn, STATE_SCHEMA)
+        return self._map_buckets(advance)
 
     # ------------------------------------------------------------------
     @staticmethod

@@ -22,7 +22,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, types as T
 
-from nrt_spark.gorilla import encode_timestamps, encode_values
 from nrt_spark.tokens import GAP_TOKEN, SCALE, EPOCH_DAY, CADENCE_DAYS
 
 BLOCKS_SCHEMA = T.StructType([
@@ -111,16 +110,6 @@ def _tier_points_batch(days: np.ndarray, values: np.ndarray,
 #: sentinel for NaN means in the integer codec (far outside any real
 #: scaled value)
 INT_NAN_SENTINEL = -(1 << 40)
-
-
-def encode_means_int(means: np.ndarray, scale: float) -> bytes:
-    """Quantized-value codec: scaled-int delta-of-delta (reuses the
-    timestamp codec — any int64 stream works).  Decimal-quantized values
-    have full float mantissas, so float-XOR only halves them; small
-    integer deltas pack into the 7/9/12-bit classes (~1-2 B/pt)."""
-    ints = np.where(np.isnan(means), INT_NAN_SENTINEL,
-                    np.rint(np.nan_to_num(means) * scale)).astype(np.int64)
-    return encode_timestamps(ints)
 
 
 def dequantize_ints(ints: np.ndarray, scale: float) -> np.ndarray:

@@ -19,6 +19,10 @@ protobuf — this container does not):
   are masked like NaN gaps (reference W7/W8: nrt's contract is
   no-late-data, so anything behind the per-series high-watermark is
   dropped).
+- **one advance**: each micro-batch goes through the batch engine's
+  own per-bucket functions — ``engine.dense_from_obs`` scatters the
+  long-form rows onto the observed days and ``engine.advance_bucket``
+  folds them (``_advance``), exactly as ``NrtEngine.monitor_obs`` does.
 
 Emits one row per (micro-batch, doc_id) with the post-batch mask /
 process / detection_date — the streaming ``report()``.
@@ -33,8 +37,9 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 
-from nrt_spark.kernels.monitors import run_monitor
-from nrt_spark.state import pdf_to_state, state_to_pdf, STATE_COLUMNS
+from nrt_spark.engine import (
+    _load_bucket_state, advance_bucket, dense_from_obs, with_bucket)
+from nrt_spark.state import STATE_COLUMNS
 
 OUTPUT_SCHEMA = ("doc_id string, mask tinyint, process double, "
                  "detection_date int, last_day int")
@@ -42,57 +47,12 @@ STATE_BLOB_SCHEMA = "blob binary"
 OBS_SCHEMA = "doc_id string, day int, value double"
 
 
-def _load_bucket_state(state_path: str, bucket: int) -> pd.DataFrame | None:
-    """Read one bucket's rows from a bucket-partitioned state snapshot
-    (local/shared filesystem via pyarrow; no SparkSession on executors).
-    """
-    import pyarrow.parquet as pq
-
-    part = Path(state_path) / f"bucket={bucket}"
-    if not part.exists():
-        return None
-    pdf = pq.read_table(part).to_pandas()
-    pdf["bucket"] = bucket
-    return pdf[STATE_COLUMNS].sort_values("doc_id").reset_index(drop=True)
-
-
 def _advance(state_pdf: pd.DataFrame, obs: pd.DataFrame, params: dict,
              bucket: int, update_mask: bool = True) -> pd.DataFrame:
-    """Fold a micro-batch of (doc_id, day, value) through the monitor."""
-    kstate = pdf_to_state(state_pdf)
-    last_day = state_pdf["last_day"].to_numpy(dtype=np.int64)
-    doc_index = pd.Index(state_pdf["doc_id"])
-    # duplicate (doc, day) rows: the scatter below is last-write-wins,
-    # so order the rows deterministically (max value wins; NaN loses) —
-    # arrival order depends on partition layout and must not decide
-    obs = obs.sort_values(["day", "value"], na_position="first",
-                          kind="mergesort")
-    days = np.sort(obs["day"].unique()).astype(np.int64)
-    K = len(state_pdf)
-    y = np.full((len(days), K), np.nan)
-    if len(obs):
-        # one vectorized scatter instead of a per-observation Python
-        # loop (the only per-point Python between scan and sink on the
-        # incremental path, per the round-2 perf audit)
-        doc_idx = doc_index.get_indexer(obs["doc_id"])
-        keep = doc_idx >= 0
-        obs_day = obs["day"].to_numpy(dtype=np.int64)
-        day_idx = np.searchsorted(days, obs_day)
-        vals = obs["value"].to_numpy(dtype=np.float64)
-        # fancy assignment writes rows in order, so with duplicate
-        # (day, doc) pairs the LAST row — the deterministic max — wins
-        y[day_idx[keep], doc_idx[keep]] = vals[keep]
-    # late data behind each series' watermark -> NaN (skip semantics)
-    y[days[:, None] <= last_day[None, :]] = np.nan
-    run_monitor(kstate, y, days, params, update_mask=update_mask)
-    # per-series high-watermark: only series observed in this micro-batch
-    # advance (a batch-wide max would mask other series' later-arriving
-    # earlier observations as late — see engine.monitor's per-doc last_day)
-    new_last = last_day.copy()
-    if len(obs):
-        np.maximum.at(new_last, doc_idx[keep], obs_day[keep])
-    return state_to_pdf(kstate, state_pdf["doc_id"].to_numpy(), bucket,
-                        new_last)
+    """Fold a micro-batch of (doc_id, day, value) through bucket
+    ``bucket``'s monitor state (``engine.monitor_obs``'s advance)."""
+    return advance_bucket(state_pdf, *dense_from_obs(state_pdf, obs), bucket,
+                          params, update_mask)
 
 
 def _report_rows(state_pdf: pd.DataFrame) -> pd.DataFrame:
@@ -303,7 +263,6 @@ def monitor_stream(obs_stream, state_path: str, params: dict,
         streaming DataFrame (doc_id, mask, process, detection_date,
         last_day), one row per doc per micro-batch.
     """
-    from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     def step(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
@@ -312,7 +271,7 @@ def monitor_stream(obs_stream, state_path: str, params: dict,
             state_pdf = pickle.loads(state.get[0])
         else:
             state_pdf = _load_bucket_state(state_path, bucket)
-            if state_pdf is None:
+            if not len(state_pdf):
                 return
         obs = pd.concat(list(pdfs), ignore_index=True)
         new_pdf = _advance(state_pdf, obs, params, bucket)
@@ -324,8 +283,7 @@ def monitor_stream(obs_stream, state_path: str, params: dict,
                 "threshold (kill/restart soak)")
         yield _report_rows(new_pdf)
 
-    keyed = obs_stream.withColumn(
-        "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(num_buckets)).cast("int"))
+    keyed = with_bucket(obs_stream, num_buckets)
     return keyed.groupBy("bucket").applyInPandasWithState(
         step,
         outputStructType=OUTPUT_SCHEMA,

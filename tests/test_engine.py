@@ -15,7 +15,8 @@ import pytest
 from nrt_spark.datagen import generate_tokens
 from nrt_spark.engine import NrtEngine
 from nrt_spark.kernels.monitors import fit_state, resolve_params, run_monitor
-from nrt_spark.tokens import grid_days, tokens_to_matrix
+from nrt_spark.state import STATE_COLUMNS
+from nrt_spark.tokens import decode_long, grid_days, tokens_to_matrix
 
 HISTORY_END = "2016-05-10"  # grid position 99 (inclusive)
 N_DOCS = 60
@@ -27,6 +28,23 @@ def tokens(spark):
     df = generate_tokens(spark, N_DOCS, n_obs=N_OBS).cache()
     df.count()
     return df
+
+
+def _collect(df) -> pd.DataFrame:
+    return df.toPandas().sort_values("doc_id").reset_index(drop=True)
+
+
+def _assert_same_state(a: pd.DataFrame, b: pd.DataFrame) -> None:
+    """Every STATE_COLUMNS column equal, row for row."""
+    for col in STATE_COLUMNS:
+        if col in ("beta", "window"):
+            assert len(a[col]) == len(b[col]), col
+            for x, yv in zip(a[col], b[col]):
+                np.testing.assert_array_equal(np.asarray(x), np.asarray(yv),
+                                              err_msg=col)
+        else:
+            np.testing.assert_array_equal(a[col].to_numpy(),
+                                          b[col].to_numpy(), err_msg=col)
 
 
 def _oracle(tokens_pdf: pd.DataFrame, monitor: str, **overrides):
@@ -229,20 +247,20 @@ def test_catalog_backend_fallback(spark, tokens, tmp_path):
 
 def test_monitor_obs_long_form_equals_token_monitor(spark, tokens):
     """Long-form incremental observations produce the exact same final
-    state as re-shipping full token arrays."""
-    from nrt_spark.tokens import decode_long
+    state as re-shipping full token arrays: every state column, for each
+    OLS monitor."""
     from pyspark.sql import functions as F
 
-    eng = NrtEngine(spark, "cusum", num_buckets=8, trend=False, method="OLS")
-    state0 = eng.fit(tokens, history_end=HISTORY_END).cache()
-    via_tokens = eng.monitor(state0, tokens).toPandas().sort_values(
-        "doc_id").reset_index(drop=True)
     obs = decode_long(tokens).filter(F.col("ts") > HISTORY_END)
-    via_obs = eng.monitor_obs(state0, obs).toPandas().sort_values(
-        "doc_id").reset_index(drop=True)
-    for col in ["mask", "process", "boundary", "n", "detection_date"]:
-        np.testing.assert_array_equal(via_tokens[col].to_numpy(),
-                                      via_obs[col].to_numpy(), err_msg=col)
+    for monitor in ("ewma", "cusum", "mosum"):
+        eng = NrtEngine(spark, monitor, num_buckets=8,
+                        **ENGINE_OVERRIDES[monitor])
+        state0 = eng.fit(tokens, history_end=HISTORY_END).cache()
+        via_tokens = _collect(eng.monitor(state0, tokens))
+        via_obs = _collect(eng.monitor_obs(state0, obs))
+        assert len(via_tokens) == N_DOCS, monitor
+        _assert_same_state(via_tokens, via_obs)
+        state0.unpersist()
 
 
 def test_fit_monitor_single_pass_equals_two_phase(spark, tokens):
@@ -255,6 +273,93 @@ def test_fit_monitor_single_pass_equals_two_phase(spark, tokens):
                 "last_day", "histsize", "sigma"]:
         np.testing.assert_array_equal(two[col].to_numpy(),
                                       one[col].to_numpy(), err_msg=col)
+
+
+def test_fit_monitor_ccdc_screen_equals_two_phase(spark, tokens):
+    """fit_monitor with the CCDC default screen reads the band columns
+    like fit does (same per-bucket fit), and refuses a table without
+    them on the driver: the call raises, so no job runs."""
+    toks = generate_tokens(spark, 24, n_obs=N_OBS, bands=True,
+                           outlier_frac=0.05, break_frac=0.0).cache()
+    eng = NrtEngine(spark, "ccdc", num_buckets=4,
+                    method="CCDC-stable", screen_outliers="CCDC_RIRLS")
+    two = _collect(eng.monitor(eng.fit(toks, history_end=HISTORY_END), toks))
+    one = _collect(eng.fit_monitor(toks, history_end=HISTORY_END))
+    assert len(one) == 24
+    _assert_same_state(two, one)
+    toks.unpersist()
+
+    for call in (eng.fit, eng.fit_monitor):
+        with pytest.raises(ValueError, match="green_tokens"):
+            call(tokens, history_end=HISTORY_END)
+
+
+def test_monitor_degenerate_buckets(spark, tokens, tmp_path):
+    """monitor, monitor_bucketed and monitor_obs agree on degenerate
+    inputs: a bucket with state rows but no token/observation rows comes
+    back unchanged (also when its bucket directory holds no token file),
+    a state doc_id absent from the inputs keeps its state, and every
+    other series advances exactly as with the full input."""
+    from pyspark.sql import functions as F
+
+    from nrt_spark.engine import with_bucket, write_tokens_bucketed
+
+    eng = NrtEngine(spark, "cusum", num_buckets=8, trend=False,
+                    method="OLS")
+    state0 = eng.fit(tokens, history_end=HISTORY_END).cache()
+    s0 = _collect(state0)
+    empty_bucket = int(s0["bucket"].iloc[0])
+    gone = s0.loc[s0["bucket"] != empty_bucket, "doc_id"].iloc[0]
+    kept = (with_bucket(tokens, 8)
+            .filter((F.col("bucket") != empty_bucket)
+                    & (F.col("doc_id") != gone))
+            .drop("bucket"))
+    state_path, tok_path = str(tmp_path / "state"), str(tmp_path / "tok")
+    eng.save_state(state0, state_path)
+    write_tokens_bucketed(kept, tok_path, num_buckets=8)
+    obs = decode_long(kept).filter(F.col("ts") > HISTORY_END)
+
+    full = _collect(eng.monitor(state0, tokens))
+    results = {
+        "monitor": _collect(eng.monitor(state0, kept)),
+        "monitor_bucketed": _collect(
+            eng.monitor_bucketed(state_path, tok_path)),
+        "monitor_obs": _collect(eng.monitor_obs(state0, obs)),
+    }
+    (tmp_path / "tok" / f"bucket={empty_bucket}").mkdir()
+    results["monitor_bucketed, empty bucket dir"] = _collect(
+        eng.monitor_bucketed(state_path, tok_path))
+
+    untouched = ((s0["bucket"] == empty_bucket)
+                 | (s0["doc_id"] == gone)).to_numpy()
+    assert 1 < untouched.sum() < N_DOCS
+    for name, got in results.items():
+        assert list(got["doc_id"]) == list(s0["doc_id"]), name
+        _assert_same_state(got[untouched].reset_index(drop=True),
+                           s0[untouched].reset_index(drop=True))
+        _assert_same_state(got[~untouched].reset_index(drop=True),
+                           full[~untouched].reset_index(drop=True))
+    state0.unpersist()
+
+
+def test_monitor_duplicate_doc_rows_raise(spark, tokens, tmp_path):
+    """Duplicate doc_id token rows fail loudly, with the same ValueError,
+    on the cogroup and the bucketed monitor."""
+    from pyspark.errors import PythonException
+
+    from nrt_spark.engine import write_tokens_bucketed
+
+    eng = NrtEngine(spark, "ewma", num_buckets=8, trend=False)
+    state = eng.fit(tokens, history_end=HISTORY_END)
+    dup = tokens.union(tokens.limit(1))
+    state_path, tok_path = str(tmp_path / "state"), str(tmp_path / "tok")
+    eng.save_state(state, state_path)
+    write_tokens_bucketed(dup, tok_path, num_buckets=8)
+    msg = r"ValueError: monitor\(\) expects one token row per doc_id"
+    with pytest.raises(PythonException, match=msg):
+        eng.monitor(state, dup).collect()
+    with pytest.raises(PythonException, match=msg):
+        eng.monitor_bucketed(state_path, tok_path).collect()
 
 
 def test_auto_buckets(spark, tokens):

@@ -82,7 +82,7 @@ def test_state_equality_contract(spark, tokens, tmp_path):
                 np.testing.assert_array_equal(av, bv, err_msg=col)
 
 
-def test_session_warmup_runs_clean_and_once(spark):
+def test_session_warmup_runs_clean_and_once(spark, monkeypatch):
     """The session factory's runtime bootstrap (_warm_runtime) must run
     without error on an existing session, touch no user tables (it only
     uses spark.range), and be gated to once per application id."""
@@ -95,12 +95,8 @@ def test_session_warmup_runs_clean_and_once(spark):
     app_id = spark.sparkContext.applicationId
     S._WARMED.add(app_id)
     before = set(S._WARMED)
-    import os
-    os.environ["NRT_SESSION_WARMUP"] = "1"
-    try:
-        again = S.get_spark(cores=4, app_name="nrt_spark_tests",
-                            shuffle_partitions=8)
-        assert again.sparkContext.applicationId == app_id
-        assert S._WARMED == before   # no duplicate warm-up entry
-    finally:
-        os.environ["NRT_SESSION_WARMUP"] = "0"
+    monkeypatch.setenv("NRT_SESSION_WARMUP", "1")   # restored at teardown
+    again = S.get_spark(cores=4, app_name="nrt_spark_tests",
+                        shuffle_partitions=8)
+    assert again.sparkContext.applicationId == app_id
+    assert S._WARMED == before   # no duplicate warm-up entry
