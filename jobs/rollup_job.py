@@ -209,11 +209,9 @@ def main(argv=None) -> int:
 
         ran_compact = job.step("compact_blocks", compact_blocks)
 
-    from pyspark.sql import functions as F
+    from nrt_spark.compress import compression_stats
 
-    blocks = spark.read.parquet(f"{out}/blocks")
-    stats = blocks.agg(F.sum("n_points").alias("p"),
-                       F.sum("n_bytes").alias("b")).collect()[0]
+    stats = compression_stats(spark.read.parquet(f"{out}/blocks"))
     state = spark.read.parquet(f"{out}/state")
     masks = {str(r["mask"]): r["count"] for r in
              state.groupBy("mask").count().collect()}
@@ -229,8 +227,8 @@ def main(argv=None) -> int:
                               if ran_compact is not None else {})},
         "tiers_recovered": recovered,
         "mask_counts": masks,
-        "rolled_points": int(stats["p"]),
-        "bytes_per_point": round(stats["b"] / stats["p"], 3),
+        "rolled_points": stats["total_points"],
+        "bytes_per_point": round(stats["bytes_per_point"], 3),
         "wall_sec": round(time.time() - t0, 2),
     }))
     spark.stop()

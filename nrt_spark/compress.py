@@ -3,7 +3,10 @@
 One compressed block per (doc_id, tier): ``(doc_id, n_points, ts_block,
 val_block)``.  Encoding happens in a *scalar arrow-batched pandas UDF*
 over pre-collected per-series point arrays — one Python call per Arrow
-batch of series, no per-row Python in the Spark plan.
+batch of series, no per-row Python in the Spark plan.  Both directions
+call the batched codecs of :mod:`nrt_spark.gorilla` (float XOR values,
+or the scaled-int format on the read path); this module holds no codec
+of its own.
 """
 
 from __future__ import annotations
@@ -14,6 +17,7 @@ from pyspark.sql import DataFrame, functions as F
 from nrt_spark.gorilla import (
     decode_float_streams,
     decode_int_streams,
+    decode_scaled_streams,
     encode_float_streams,
     encode_int_streams,
 )
@@ -36,8 +40,7 @@ def _compress_udf():
             import numpy as np
 
             # batched encoders: every block of the Arrow batch in one
-            # set of numpy passes (byte-identical to the per-block
-            # encoders; see tests/test_gorilla.py)
+            # set of numpy passes
             ts_streams = [np.asarray(s, dtype=np.int64) for s in ts_arr]
             val_streams = [np.asarray(v, dtype=np.float64)
                            for v in val_arr]
@@ -57,24 +60,18 @@ def _decompress_batches(batches, int_scale: float | None = None):
     encode_*_streams), then straight to LONG form with repeat/concat.
     No per-point Python, no list columns, no downstream explode.
 
-    ``int_scale``: decode value blocks written by the scaled-int
-    delta-of-delta codec (sentinel -> NaN, ints / scale) instead of
+    ``int_scale``: decode value blocks written in the scaled-int
+    format (:func:`nrt_spark.gorilla.decode_scaled_streams`) instead of
     float XOR."""
     import numpy as np
-
-    from nrt_spark.fastpath import dequantize_ints
 
     for pdf in batches:
         if not len(pdf):
             continue
         ts = decode_int_streams([bytes(b) for b in pdf["ts_block"]])
-        if int_scale is None:
-            vals = decode_float_streams([bytes(b)
-                                         for b in pdf["val_block"]])
-        else:
-            vals = [dequantize_ints(v, int_scale)
-                    for v in decode_int_streams([bytes(b)
-                                                 for b in pdf["val_block"]])]
+        val_blobs = [bytes(b) for b in pdf["val_block"]]
+        vals = (decode_float_streams(val_blobs) if int_scale is None
+                else decode_scaled_streams(val_blobs, int_scale))
         lens = np.array([len(t) for t in ts], dtype=np.int64)
         yield pd.DataFrame({
             "doc_id": np.repeat(pdf["doc_id"].to_numpy(), lens),

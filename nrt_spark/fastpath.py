@@ -11,7 +11,9 @@ buckets AND the Gorilla blocks in a single ``mapInPandas`` pass:
 No exchange anywhere in the plan; scaling is limited only by input
 splits, which is exactly the property that survives a 1000-executor /
 100 TB scale-up.  Bucket values are bit-identical to the Catalyst tier
-path (same left-to-right fold per bucket; verified in tests).
+path (same left-to-right fold per bucket; verified in tests).  The
+blocks come from the batched encoders of :mod:`nrt_spark.gorilla`: float
+XOR values by default, the scaled-int format with ``int_scale``.
 """
 
 from __future__ import annotations
@@ -22,7 +24,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, types as T
 
-from nrt_spark.tokens import GAP_TOKEN, SCALE, EPOCH_DAY, CADENCE_DAYS
+from nrt_spark.tokens import (CADENCE_DAYS, EPOCH_DAY, GAP_TOKEN, SCALE,
+                              token_array)
 
 BLOCKS_SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType(), False),
@@ -107,71 +110,45 @@ def _tier_points_batch(days: np.ndarray, values: np.ndarray,
     return block_lens, bucket_days, means
 
 
-#: sentinel for NaN means in the integer codec (far outside any real
-#: scaled value)
-INT_NAN_SENTINEL = -(1 << 40)
-
-
-def dequantize_ints(ints: np.ndarray, scale: float) -> np.ndarray:
-    """Inverse of the scaled-int quantizer: sentinel -> NaN, ints/scale.
-    The ONE place the dequantize contract lives (the Spark read path and
-    the per-blob decoder both call it)."""
-    return np.where(ints == INT_NAN_SENTINEL, np.nan, ints / scale)
-
-
-def decode_means_int(blob: bytes, scale: float) -> np.ndarray:
-    from nrt_spark.gorilla import decode_timestamps
-
-    return dequantize_ints(decode_timestamps(blob), scale)
-
-
 def rollup_compress_tokens(tokens_df: DataFrame,
                            tiers: tuple = ("day", "week", "month"),
                            int_scale: float | None = None) -> DataFrame:
     """tokens -> per-(doc, tier) Gorilla blocks of bucket means, in one
     shuffle-free pass.
 
-    ``int_scale``: when set, value blocks use the scaled-int
-    delta-of-delta codec instead of float XOR (lossy at 1/int_scale
-    resolution — exact when the input values are quantized at or below
-    that resolution, e.g. day-tier means of token data with
-    ``int_scale >= SCALE * max bucket size``).
+    ``int_scale``: when set, value blocks use the scaled-int format
+    (:func:`nrt_spark.gorilla.encode_scaled_streams`) instead of float
+    XOR (lossy at 1/int_scale resolution — exact when the input values
+    are quantized at or below that resolution, e.g. day-tier means of
+    token data with ``int_scale >= SCALE * max bucket size``).  A NULL
+    ``tokens`` row is an empty series and yields no blocks.
     """
     tiers = tuple(tiers)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from nrt_spark.gorilla import (_seg_arange, encode_int_streams,
-                                       encode_float_streams)
+        from nrt_spark.gorilla import (_seg_arange, encode_float_streams,
+                                       encode_int_streams,
+                                       encode_scaled_streams)
 
         for pdf in batches:
-            tok_arrays = [np.asarray(t, dtype=np.float64)
-                          for t in pdf["tokens"]]
+            tok_arrays = [token_array(t, np.float64) for t in pdf["tokens"]]
             keep = [i for i, t in enumerate(tok_arrays) if len(t)]
             if not keep:
-                yield pd.DataFrame({k: [] for k in (
-                    "doc_id", "tier", "n_points", "ts_block", "val_block",
-                    "n_bytes")})
                 continue
             docs = pdf["doc_id"].to_numpy()[keep]
             doc_lens = np.array([len(tok_arrays[i]) for i in keep])
             toks = np.concatenate([tok_arrays[i] for i in keep])
             values = np.where(toks == GAP_TOKEN, np.nan, toks / SCALE)
             days = EPOCH_DAY + CADENCE_DAYS * _seg_arange(doc_lens)
-            out = {k: [] for k in ("doc_id", "tier", "n_points",
-                                   "ts_block", "val_block", "n_bytes")}
+            out = {k: [] for k in BLOCKS_SCHEMA.names}
             for tier in tiers:
                 block_lens, bdays, means = _tier_points_batch(
                     days, values, doc_lens, tier)
                 splits = np.cumsum(block_lens)[:-1]
-                ts_streams = np.split(bdays * 86400, splits)
-                if int_scale is None:
-                    vbs = encode_float_streams(np.split(means, splits))
-                else:
-                    ints = np.where(np.isnan(means), INT_NAN_SENTINEL,
-                                    np.rint(np.nan_to_num(means) * int_scale)
-                                    ).astype(np.int64)
-                    vbs = encode_int_streams(np.split(ints, splits))
-                tbs = encode_int_streams(ts_streams)
+                mean_streams = np.split(means, splits)
+                vbs = (encode_float_streams(mean_streams) if int_scale is None
+                       else encode_scaled_streams(mean_streams, int_scale))
+                tbs = encode_int_streams(np.split(bdays * 86400, splits))
                 out["doc_id"] += list(docs)
                 out["tier"] += [tier] * len(tbs)
                 out["n_points"] += [int(x) for x in block_lens]

@@ -12,12 +12,18 @@ Implements the two stream codecs from Pelkonen et al., VLDB 2015 §4.1
   leading/trailing-zero window, '11' + 5b leading + 6b length + bits
   otherwise.
 
-Pure Python/numpy with no per-*row* Spark involvement: blocks are
-encoded per series inside vectorized UDFs (one call per Arrow batch).
-Both directions have batched numpy implementations that process every
-block of an Arrow batch in lockstep (encode_*_streams /
-decode_*_streams); the per-point reference codecs above them define the
-wire format and serve as the fuzz oracle.
+Two codecs, one wire format:
+
+- the greedy per-point codec (``encode_/decode_timestamps``,
+  ``encode_/decode_values``) is the format's spec, the encoder for
+  blocks too short or too uniform to batch, and the fuzz oracle;
+- the batched lockstep codec (``encode_/decode_{int,float}_streams``)
+  is the production path: it encodes or decodes every block of an
+  Arrow batch in one set of numpy passes, with no per-point Python.
+
+Beside them, the scaled-int value format (``encode_scaled_streams`` /
+``decode_scaled_streams``) quantizes floats at a fixed resolution onto
+the int stream.
 """
 
 from __future__ import annotations
@@ -203,14 +209,18 @@ def decode_values(data: bytes) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# Vectorized encoders (hot path)
+# Batched encoders (production path)
 #
-# Same wire format as above — the decoders are shared — but built with
-# numpy instead of a per-point Python loop.  The one encoder freedom used:
-# the value stream picks ONE leading/trailing-zero window per block (the
-# min over the block) instead of the greedy per-point window, so every
-# non-zero XOR after the first fits the '10' branch.  ~20-40x faster;
-# compression within a few % of greedy on real series.
+# Per-block numpy calls pay ~30 ufunc dispatches per 130-point block;
+# these encode EVERY block of an Arrow batch in one set of numpy passes
+# (fields for all blocks -> one packbits -> slice per block).  Timestamp
+# blocks are byte-identical to encode_timestamps.  Value blocks use the
+# one encoder freedom of the XOR format: ONE leading/trailing-zero window
+# per block (the min over the block) instead of the greedy per-point
+# window, so every non-zero XOR after the first fits the '10' branch —
+# decodable by decode_values, compression within a few % of greedy on
+# real series.  Blocks too short (or too uniform) to batch go through the
+# greedy encoders.
 # ---------------------------------------------------------------------------
 
 def _bit_length_u64(x: np.ndarray) -> np.ndarray:
@@ -248,102 +258,6 @@ def _pack_fields(vals: np.ndarray, widths: np.ndarray) -> bytes:
     return np.packbits(flat).tobytes()
 
 
-def encode_values_fast(values: np.ndarray) -> bytes:
-    """Vectorized XOR encoder, decodable by :func:`decode_values`."""
-    bits = np.ascontiguousarray(np.asarray(values, dtype=np.float64)) \
-        .view(np.uint64)
-    n = len(bits)
-    if n <= 2:
-        return encode_values(values)
-    xor = bits[1:] ^ bits[:-1]
-    nz = xor != 0
-    if not nz.any():
-        return encode_values(values)
-    bl = _bit_length_u64(xor[nz])
-    lead_each = 64 - bl
-    low = xor[nz] & (~xor[nz] + np.uint64(1))
-    tail_each = _bit_length_u64(low) - 1
-    lead = int(min(31, lead_each.min()))
-    tail = int(tail_each.min())
-    mbits = 64 - lead - tail
-    # fields: 32-bit count, 64-bit first value, then per-xor:
-    #   zero -> '0' (1 bit)
-    #   first nonzero -> '11' + 5b lead + 6b mbits + payload
-    #   later nonzero -> '10' + payload
-    first_nz = int(np.flatnonzero(nz)[0])
-    payloads = (xor >> np.uint64(tail)).astype(np.uint64)
-    m = n - 1
-    vals = np.empty(2 + 2 * m, dtype=np.uint64)
-    widths = np.zeros(2 + 2 * m, dtype=np.int64)
-    vals[0], widths[0] = n, 32
-    vals[1], widths[1] = bits[0], 64
-    # control field per xor
-    ctrl = np.zeros(m, dtype=np.uint64)
-    ctrl_w = np.ones(m, dtype=np.int64)
-    ctrl[nz] = 0b10
-    ctrl_w[nz] = 2
-    # header '11'+5+6 for the first nonzero: fold into its control field
-    ctrl[first_nz] = (np.uint64(0b11) << np.uint64(11)) \
-        | (np.uint64(lead) << np.uint64(6)) | np.uint64(mbits & 63)
-    ctrl_w[first_nz] = 13
-    pay_w = np.where(nz, mbits, 0).astype(np.int64)
-    vals[2::2] = ctrl
-    widths[2::2] = ctrl_w
-    vals[3::2] = np.where(nz, payloads, 0)
-    widths[3::2] = pay_w
-    keep = widths > 0
-    return _pack_fields(vals[keep], widths[keep])
-
-
-def encode_timestamps_fast(ts: np.ndarray) -> bytes:
-    """Vectorized delta-of-delta encoder, decodable by
-    :func:`decode_timestamps`."""
-    ts = np.asarray(ts, dtype=np.int64)
-    n = len(ts)
-    if n <= 2:
-        return encode_timestamps(ts)
-    deltas = np.diff(ts)
-    dods = np.diff(deltas)
-    m = len(dods)
-    vals = np.empty(3 + 2 * m, dtype=np.uint64)
-    widths = np.zeros(3 + 2 * m, dtype=np.int64)
-    vals[0], widths[0] = n, 32
-    vals[1], widths[1] = np.uint64(int(ts[0]) & _MASK64), 64
-    vals[2], widths[2] = np.uint64(int(deltas[0]) & _MASK64), 64
-    ctrl = np.zeros(m, dtype=np.uint64)
-    ctrl_w = np.ones(m, dtype=np.int64)
-    pay = np.zeros(m, dtype=np.uint64)
-    pay_w = np.zeros(m, dtype=np.int64)
-    rem = dods != 0
-    for nbits, prefix, plen, lo, hi in _DOD_RANGES:
-        sel = rem & (dods >= lo) & (dods <= hi)
-        ctrl[sel] = prefix
-        ctrl_w[sel] = plen
-        pay[sel] = (dods[sel] - lo).astype(np.uint64)
-        pay_w[sel] = nbits
-        rem = rem & ~sel
-    ctrl[rem] = 0b1111
-    ctrl_w[rem] = 4
-    pay[rem] = dods[rem].astype(np.uint64)
-    pay_w[rem] = 64
-    vals[3::2] = ctrl
-    widths[3::2] = ctrl_w
-    vals[4::2] = pay
-    widths[4::2] = pay_w
-    keep = widths > 0
-    return _pack_fields(vals[keep], widths[keep])
-
-
-# ---------------------------------------------------------------------------
-# Batched encoders (hottest path)
-#
-# Per-block numpy calls still pay ~30 ufunc dispatches per 130-point
-# block; these encode EVERY block of an Arrow batch in one set of numpy
-# passes (fields for all blocks -> one packbits -> slice per block).
-# Byte-compatible with the shared decoders; value blocks use the same
-# static per-block XOR window as encode_values_fast.
-# ---------------------------------------------------------------------------
-
 def _seg_arange(counts: np.ndarray) -> np.ndarray:
     """[0..c0-1, 0..c1-1, ...] for segment sizes ``counts``."""
     ends = np.cumsum(counts)
@@ -357,10 +271,7 @@ def _pack_fields_multi(vals: np.ndarray, widths: np.ndarray,
     """Pack consecutive per-block field runs into per-block byte blobs
     (each block zero-padded to a byte boundary), with ONE packbits."""
     nb = len(field_counts)
-    if nb == 0:
-        return []
     f_ends = np.cumsum(field_counts)
-    f_starts = f_ends - field_counts
     bit_ends = np.cumsum(widths)
     blk_bit_end = bit_ends[f_ends - 1]
     blk_bits = np.diff(np.concatenate(([0], blk_bit_end)))
@@ -381,53 +292,41 @@ def _pack_fields_multi(vals: np.ndarray, widths: np.ndarray,
     return [blob[offs[b]:offs[b + 1]] for b in range(nb)]
 
 
-#: blocks per internal batch pass.  Bounds the dense field-matrix
-#: temporaries to a few MB: this host intermittently fault-throttles
-#: fresh large allocations, and 8+ concurrent workers each allocating
-#: tens of MB per Arrow batch destroyed scaling (measured 0.41
-#: efficiency vs 0.88+ with bounded chunks).
-_BATCH_CHUNK = 256
+def _pack_blocks(L: np.ndarray, heads: list, ctrl: np.ndarray,
+                 ctrl_w: np.ndarray, pay: np.ndarray, pay_w: np.ndarray
+                 ) -> list[bytes]:
+    """The one per-block field layout of both stream formats.
+
+    Each block is its 32-bit point count ``L``, then the ``heads``
+    fields (``(per-block values, width)``: the points stored raw), then
+    one (control, payload) field pair per remaining point — the
+    ``ctrl``/``pay`` arrays hold those pairs for all blocks, in order.
+    Zero-width fields emit nothing."""
+    heads = [(L, 32)] + heads
+    m = L - (len(heads) - 1)                 # coded points per block
+    fcounts = len(heads) + 2 * m
+    f_starts = np.cumsum(fcounts) - fcounts
+    vals = np.zeros(int(fcounts.sum()), dtype=np.uint64)
+    widths = np.zeros(len(vals), dtype=np.int64)
+    for j, (v, w) in enumerate(heads):
+        vals[f_starts + j] = v.astype(np.uint64)
+        widths[f_starts + j] = w
+    pos = np.repeat(f_starts + len(heads), m) + 2 * _seg_arange(m)
+    vals[pos], widths[pos] = ctrl, ctrl_w
+    vals[pos + 1], widths[pos + 1] = pay, pay_w
+    return _pack_fields_multi(vals, widths, fcounts)
 
 
-def _chunked(encode_fn, streams: list) -> list[bytes]:
-    if len(streams) <= _BATCH_CHUNK:
-        return encode_fn(streams)
-    out: list[bytes] = []
-    for i in range(0, len(streams), _BATCH_CHUNK):
-        out.extend(encode_fn(streams[i:i + _BATCH_CHUNK]))
-    return out
-
-
-def encode_int_streams(streams: list) -> list[bytes]:
-    """Batched delta-of-delta encoder (chunked numpy passes over many
-    blocks).  Byte-identical to per-block :func:`encode_timestamps`."""
-    return _chunked(_encode_int_streams_one, streams)
-
-
-def _encode_int_streams_one(streams: list) -> list[bytes]:
-    out: list[bytes | None] = [None] * len(streams)
-    big_idx = [i for i, s in enumerate(streams) if len(s) >= 3]
-    for i, s in enumerate(streams):
-        if len(s) < 3:
-            out[i] = encode_timestamps(np.asarray(s, dtype=np.int64))
-    if not big_idx:
-        return out  # type: ignore[return-value]
-    blocks = [np.asarray(streams[i], dtype=np.int64) for i in big_idx]
-    L = np.array([len(b) for b in blocks])
-    nb = len(blocks)
-    allv = np.concatenate(blocks)
-    intra = _seg_arange(L)
+def _dod_fields(allv: np.ndarray, L: np.ndarray):
+    """Delta-of-delta fields of the concatenated int64 blocks ``allv``
+    (each block >= 3 points): heads (first value, first delta) and one
+    range-coded dod per later point."""
+    starts = np.cumsum(L) - L
     deltas = np.empty(len(allv), dtype=np.int64)
     deltas[1:] = allv[1:] - allv[:-1]       # garbage at block firsts, masked
-    starts = np.cumsum(L) - L
-    delta0 = deltas[starts + 1]
-    # dods: per block elements 2..L-1
-    is_dod = intra >= 2
     dods = np.zeros(len(allv), dtype=np.int64)
     dods[2:] = deltas[2:] - deltas[1:-1]
-    D = dods[is_dod]
-    m = L - 2                                # dods per block
-    # classify
+    D = dods[_seg_arange(L) >= 2]
     ctrl = np.zeros(len(D), dtype=np.uint64)
     ctrl_w = np.ones(len(D), dtype=np.int64)
     pay = np.zeros(len(D), dtype=np.uint64)
@@ -444,63 +343,26 @@ def _encode_int_streams_one(streams: list) -> list[bytes]:
     ctrl_w[rem] = 4
     pay[rem] = D[rem].astype(np.uint64)
     pay_w[rem] = 64
-    # assemble fields: per block 3 headers + 2 per dod
-    fcounts = 3 + 2 * m
-    f_starts = np.cumsum(fcounts) - fcounts
-    total_f = int(fcounts.sum())
-    vals = np.zeros(total_f, dtype=np.uint64)
-    widths = np.zeros(total_f, dtype=np.int64)
-    vals[f_starts] = L.astype(np.uint64)
-    widths[f_starts] = 32
-    vals[f_starts + 1] = allv[starts].astype(np.uint64)
-    widths[f_starts + 1] = 64
-    vals[f_starts + 2] = delta0.astype(np.uint64)
-    widths[f_starts + 2] = 64
-    dod_intra = _seg_arange(m)
-    dod_pos = np.repeat(f_starts + 3, m) + 2 * dod_intra
-    vals[dod_pos] = ctrl
-    widths[dod_pos] = ctrl_w
-    vals[dod_pos + 1] = pay
-    widths[dod_pos + 1] = pay_w
-    blobs = _pack_fields_multi(vals, widths, fcounts)
-    for j, i in enumerate(big_idx):
-        out[i] = blobs[j]
-    return out  # type: ignore[return-value]
+    heads = [(allv[starts], 64), (deltas[starts + 1], 64)]
+    return heads, ctrl, ctrl_w, pay, pay_w
 
 
-def encode_float_streams(streams: list) -> list[bytes]:
-    """Batched XOR encoder with static per-block windows (chunked numpy
-    passes).  Byte-identical to :func:`encode_values_fast`."""
-    return _chunked(_encode_float_streams_one, streams)
-
-
-def _encode_float_streams_one(streams: list) -> list[bytes]:
-    out: list[bytes | None] = [None] * len(streams)
-    blocks, big_idx = [], []
-    for i, s in enumerate(streams):
-        a = np.ascontiguousarray(np.asarray(s, dtype=np.float64))
-        b = a.view(np.uint64)
-        if len(b) <= 2 or not (b[1:] != b[:-1]).any():
-            out[i] = encode_values(a)        # tiny / all-identical blocks
-        else:
-            blocks.append(b)
-            big_idx.append(i)
-    if not big_idx:
-        return out  # type: ignore[return-value]
-    L = np.array([len(b) for b in blocks])
-    nb = len(blocks)
-    allv = np.concatenate(blocks)
-    intra = _seg_arange(L)
-    starts = np.cumsum(L) - L
-    xor = np.zeros(len(allv), dtype=np.uint64)
-    xor[1:] = allv[1:] ^ allv[:-1]
-    is_x = intra > 0                          # one xor per non-first element
-    X = xor[is_x]
+def _xor_fields(allv: np.ndarray, L: np.ndarray):
+    """XOR fields of the concatenated float64 blocks ``allv`` (each
+    block >= 3 points, not all identical) with one static window per
+    block: head (first value's bits) and one field pair per later
+    point; the block's first non-zero XOR carries the '11' window
+    header in its control field."""
+    bits = allv.view(np.uint64)
+    nb = len(L)
+    xor = np.zeros(len(bits), dtype=np.uint64)
+    xor[1:] = bits[1:] ^ bits[:-1]
+    X = xor[_seg_arange(L) > 0]               # one xor per non-first element
     m = L - 1
     segid = np.repeat(np.arange(nb), m)
     nz = X != 0
     bl = _bit_length_u64(X[nz])
-    lead_each = np.minimum(64 - bl, 31)
+    lead_each = np.minimum(64 - bl, 31)       # cap per paper: 5-bit field
     low = X[nz] & (~X[nz] + np.uint64(1))
     tail_each = _bit_length_u64(low) - 1
     lead_b = np.full(nb, 64, dtype=np.int64)
@@ -511,7 +373,6 @@ def _encode_float_streams_one(streams: list) -> list[bytes]:
     xi = _seg_arange(m)                       # xor index within block
     first_nz = np.full(nb, np.iinfo(np.int64).max, dtype=np.int64)
     np.minimum.at(first_nz, segid[nz], xi[nz])
-    # ctrl/payload per xor
     ctrl = np.zeros(len(X), dtype=np.uint64)
     ctrl_w = np.ones(len(X), dtype=np.int64)
     ctrl[nz] = 0b10
@@ -526,25 +387,68 @@ def _encode_float_streams_one(streams: list) -> list[bytes]:
     pay_w = np.zeros(len(X), dtype=np.int64)
     pay[nz] = X[nz] >> tail_b[segid[nz]].astype(np.uint64)
     pay_w[nz] = mbits_b[segid[nz]]
-    # fields: per block 2 headers + 2 per xor
-    fcounts = 2 + 2 * m
-    f_starts = np.cumsum(fcounts) - fcounts
-    total_f = int(fcounts.sum())
-    vals = np.zeros(total_f, dtype=np.uint64)
-    widths = np.zeros(total_f, dtype=np.int64)
-    vals[f_starts] = L.astype(np.uint64)
-    widths[f_starts] = 32
-    vals[f_starts + 1] = allv[starts]
-    widths[f_starts + 1] = 64
-    x_pos = np.repeat(f_starts + 2, m) + 2 * xi
-    vals[x_pos] = ctrl
-    widths[x_pos] = ctrl_w
-    vals[x_pos + 1] = pay
-    widths[x_pos + 1] = pay_w
-    blobs = _pack_fields_multi(vals, widths, fcounts)
-    for j, i in enumerate(big_idx):
-        out[i] = blobs[j]
-    return out  # type: ignore[return-value]
+    starts = np.cumsum(L) - L
+    return [(bits[starts], 64)], ctrl, ctrl_w, pay, pay_w
+
+
+#: blocks per encode pass.  Bounds the dense field-matrix temporaries to
+#: a few MB: this host intermittently fault-throttles fresh large
+#: allocations, and 8+ concurrent workers each allocating tens of MB per
+#: Arrow batch destroyed scaling (measured 0.41 efficiency vs 0.88+ with
+#: bounded chunks).
+_BATCH_CHUNK = 256
+
+#: blocks per decode pass — bounds the (nb, 64) gather temporaries to a
+#: few MB (same fault-throttling rationale as _BATCH_CHUNK, but decode
+#: temporaries are ~8x smaller than the encoder's dense field matrix).
+_DECODE_CHUNK = 4096
+
+
+def _chunked(fn, items: list, size: int) -> list:
+    """``fn`` over consecutive ``size``-item slices of ``items`` (never
+    an empty one), results concatenated in order."""
+    out: list = []
+    for i in range(0, len(items), size):
+        out.extend(fn(items[i:i + size]))
+    return out
+
+
+def _encode_streams(streams: list, dtype, batchable, greedy, fields
+                    ) -> list[bytes]:
+    """Encode every stream: the ones ``batchable`` rejects with the
+    per-point ``greedy`` encoder, the rest a chunk at a time through
+    ``fields`` and :func:`_pack_blocks`."""
+    def encode_chunk(arrs: list) -> list[bytes]:
+        out = [None if batchable(a) else greedy(a) for a in arrs]
+        idx = [i for i, b in enumerate(out) if b is None]
+        if idx:
+            L = np.array([len(arrs[i]) for i in idx])
+            allv = np.concatenate([arrs[i] for i in idx])
+            for i, blob in zip(idx, _pack_blocks(L, *fields(allv, L))):
+                out[i] = blob
+        return out
+
+    arrs = [np.ascontiguousarray(s, dtype=dtype) for s in streams]
+    return _chunked(encode_chunk, arrs, _BATCH_CHUNK)
+
+
+def encode_int_streams(streams: list) -> list[bytes]:
+    """Batched delta-of-delta encoder.  Byte-identical to per-block
+    :func:`encode_timestamps`."""
+    return _encode_streams(streams, np.int64, lambda a: len(a) >= 3,
+                           encode_timestamps, _dod_fields)
+
+
+def _varies(a: np.ndarray) -> bool:
+    b = a.view(np.uint64)        # bit patterns: NaN payloads compare too
+    return len(b) > 2 and bool((b[1:] != b[:-1]).any())
+
+
+def encode_float_streams(streams: list) -> list[bytes]:
+    """Batched XOR encoder with static per-block windows; tiny and
+    all-identical blocks are encoded by :func:`encode_values`."""
+    return _encode_streams(streams, np.float64, _varies, encode_values,
+                           _xor_fields)
 
 
 # ---------------------------------------------------------------------------
@@ -557,12 +461,6 @@ def _encode_float_streams_one(streams: list) -> list[bytes]:
 # so per-point Python cost amortizes to ~1/batch_size.  They accept any
 # stream the per-point decoders accept (greedy or static windows).
 # ---------------------------------------------------------------------------
-
-#: blocks per decode pass — bounds the (nb, 64) gather temporaries to a
-#: few MB (same fault-throttling rationale as _BATCH_CHUNK, but decode
-#: temporaries are ~8x smaller than the encoder's dense field matrix).
-_DECODE_CHUNK = 4096
-
 
 def _read_bit_vec(data: np.ndarray, cur: np.ndarray) -> np.ndarray:
     """Read ONE bit at absolute bit offset ``cur[b]`` per block (the
@@ -592,43 +490,35 @@ def _read_bits_vec(data: np.ndarray, cur: np.ndarray, widths: np.ndarray
     return np.where(wd > 0, v >> shift, np.uint64(0))
 
 
-def _bytes_of(blobs: list[bytes]) -> tuple[np.ndarray, np.ndarray]:
-    """Concatenate blobs -> (byte array padded with 16 zero bytes so any
-    9-byte window gather stays in bounds, per-blob start bit offsets)."""
+def _open_blocks(blobs: list[bytes]):
+    """Both decoders' prologue: (the blobs concatenated, padded with 16
+    zero bytes so any 9-byte window gather stays in bounds; per-block
+    bit cursor past the header; point counts ``n``; first value's raw
+    64 bits)."""
     lens = np.array([len(b) for b in blobs], dtype=np.int64)
     data = np.concatenate([np.frombuffer(b"".join(blobs), dtype=np.uint8),
                            np.zeros(16, dtype=np.uint8)])
-    starts = (np.concatenate(([0], np.cumsum(lens)[:-1]))) * 8
-    return data, starts
-
-
-def _to_signed(u: np.ndarray) -> np.ndarray:
-    return u.astype(np.int64)  # two's complement reinterpretation
+    cur = (np.cumsum(lens) - lens) * 8
+    n = _read_bits_vec(data, cur, np.full(len(blobs), 32, dtype=np.int64)) \
+        .astype(np.int64)
+    cur += 32
+    has0 = np.where(n > 0, 64, 0)
+    first = _read_bits_vec(data, cur, has0)
+    cur += has0
+    return data, cur, n, first
 
 
 def decode_float_streams(blobs: list[bytes]) -> list[np.ndarray]:
-    """Batched XOR decoder: inverse of encode_values / *_fast /
+    """Batched XOR decoder: inverse of encode_values /
     encode_float_streams."""
-    out: list[np.ndarray] = []
-    for i in range(0, len(blobs), _DECODE_CHUNK):
-        out.extend(_decode_float_streams_one(blobs[i:i + _DECODE_CHUNK]))
-    return out
+    return _chunked(_decode_float_chunk, blobs, _DECODE_CHUNK)
 
 
-def _decode_float_streams_one(blobs: list[bytes]) -> list[np.ndarray]:
+def _decode_float_chunk(blobs: list[bytes]) -> list[np.ndarray]:
     nb = len(blobs)
-    if nb == 0:
-        return []
-    data, cur = _bytes_of(blobs)
-    cur = cur.copy()
-    n = _read_bits_vec(data, cur, np.full(nb, 32, dtype=np.int64)) \
-        .astype(np.int64)
-    cur += 32
-    maxn = int(n.max()) if nb else 0
+    data, cur, n, first = _open_blocks(blobs)
+    maxn = int(n.max())
     vals = np.zeros((nb, max(maxn, 1)), dtype=np.uint64)
-    has0 = n > 0
-    first = _read_bits_vec(data, cur, np.where(has0, 64, 0))
-    cur += np.where(has0, 64, 0)
     vals[:, 0] = first
     curval = first.copy()
     lead = np.zeros(nb, dtype=np.int64)
@@ -663,30 +553,19 @@ def _decode_float_streams_one(blobs: list[bytes]) -> list[np.ndarray]:
 
 def decode_int_streams(blobs: list[bytes]) -> list[np.ndarray]:
     """Batched delta-of-delta decoder: inverse of encode_timestamps /
-    *_fast / encode_int_streams."""
-    out: list[np.ndarray] = []
-    for i in range(0, len(blobs), _DECODE_CHUNK):
-        out.extend(_decode_int_streams_one(blobs[i:i + _DECODE_CHUNK]))
-    return out
+    encode_int_streams."""
+    return _chunked(_decode_int_chunk, blobs, _DECODE_CHUNK)
 
 
-def _decode_int_streams_one(blobs: list[bytes]) -> list[np.ndarray]:
+def _decode_int_chunk(blobs: list[bytes]) -> list[np.ndarray]:
     nb = len(blobs)
-    if nb == 0:
-        return []
-    data, cur = _bytes_of(blobs)
-    cur = cur.copy()
-    n = _read_bits_vec(data, cur, np.full(nb, 32, dtype=np.int64)) \
-        .astype(np.int64)
-    cur += 32
-    maxn = int(n.max()) if nb else 0
+    data, cur, n, first = _open_blocks(blobs)
+    first = first.astype(np.int64)     # two's complement reinterpretation
+    maxn = int(n.max())
     vals = np.zeros((nb, max(maxn, 1)), dtype=np.int64)
-    has0 = n > 0
-    first = _to_signed(_read_bits_vec(data, cur, np.where(has0, 64, 0)))
-    cur += np.where(has0, 64, 0)
     vals[:, 0] = first
     has1 = n > 1
-    delta = _to_signed(_read_bits_vec(data, cur, np.where(has1, 64, 0)))
+    delta = _read_bits_vec(data, cur, np.where(has1, 64, 0)).astype(np.int64)
     cur += np.where(has1, 64, 0)
     if maxn > 1:     # numpy bounds-checks the column even for empty masks
         vals[has1, 1] = first[has1] + delta[has1]
@@ -720,18 +599,42 @@ def _decode_int_streams_one(blobs: list[bytes]) -> list[np.ndarray]:
         if len(rd):
             pay = _read_bits_vec(data, cur[rd], pw[rd])
             cur[rd] += pw[rd]
-            dod = np.where(klass[rd] == 4, _to_signed(pay),
-                           pay.astype(np.int64) + lo[rd])
-            delta[rd] += dod
+            # raw-64 dods (class 4) have lo == 0: a plain signed read
+            delta[rd] += pay.astype(np.int64) + lo[rd]
         prev[ai] += delta[ai]
         vals[ai, i] = prev[ai]
     return [vals[b, :n[b]].copy() for b in range(nb)]
 
 
-def encode_block(ts: np.ndarray, values: np.ndarray) -> tuple[bytes, bytes, int]:
-    """(ts_block, val_block, n_points) for one series/tier block."""
-    return encode_timestamps(ts), encode_values(values), len(ts)
+# ---------------------------------------------------------------------------
+# Scaled-int value format
+#
+# The archive's optional lossy value codec: each value quantized to
+# rint(x * scale), NaN stored as a sentinel, and the int stream coded
+# delta-of-delta like timestamps.  Exact when the values are already
+# multiples of 1/scale (e.g. day-tier means of token data at
+# scale >= SCALE), and far smaller than float XOR there.
+# ---------------------------------------------------------------------------
+
+#: NaN in the scaled-int format (far outside any real scaled value)
+INT_NAN_SENTINEL = -(1 << 40)
 
 
-def decode_block(ts_block: bytes, val_block: bytes):
-    return decode_timestamps(ts_block), decode_values(val_block)
+def encode_scaled_streams(streams: list, scale: float) -> list[bytes]:
+    """Quantize each float stream at 1/``scale`` and encode it with
+    :func:`encode_int_streams`."""
+    if not len(streams):
+        return []
+    lens = np.array([len(s) for s in streams])
+    x = np.concatenate([np.asarray(s, dtype=np.float64) for s in streams])
+    q = np.where(np.isnan(x), INT_NAN_SENTINEL,
+                 np.rint(np.nan_to_num(x) * scale)).astype(np.int64)
+    return encode_int_streams(np.split(q, np.cumsum(lens)[:-1]))
+
+
+def decode_scaled_streams(blobs: list[bytes], scale: float
+                          ) -> list[np.ndarray]:
+    """Inverse of :func:`encode_scaled_streams`: sentinel -> NaN,
+    ints / scale."""
+    return [np.where(q == INT_NAN_SENTINEL, np.nan, q / scale)
+            for q in decode_int_streams(blobs)]

@@ -130,7 +130,8 @@ def fit_state(y: np.ndarray, dates_days: np.ndarray, params: dict,
     state = _empty_state(K, n_coef)
     if mask is not None:
         state["mask"] = np.asarray(mask, dtype=np.uint8).copy()
-    state["fit_start"][:] = dates_days.min()
+    if M:       # an empty grid (all-NULL bucket) leaves every series short
+        state["fit_start"][:] = dates_days.min()
 
     def monitored():
         return state["mask"] == MASK_MONITORED

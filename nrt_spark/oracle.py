@@ -117,7 +117,7 @@ def gorilla_stats_oracle(n_docs: int = 200, n_obs: int = 130
     total points and total BYTES per tier are fully determined by the
     token table.  Round-trip mismatches are pinned to 0."""
     from nrt_spark.fastpath import _tier_points
-    from nrt_spark.gorilla import encode_timestamps, encode_values_fast
+    from nrt_spark.gorilla import encode_float_streams, encode_timestamps
     from nrt_spark.tokens import GAP_TOKEN, SCALE
 
     toks = generate_tokens_local(n_docs, n_obs=n_obs)
@@ -128,16 +128,18 @@ def gorilla_stats_oracle(n_docs: int = 200, n_obs: int = 130
     for tier in ("day", "week", "month"):
         bdays, _ = _tier_points(days, np.zeros(n_obs), tier)
         ts_blocks[tier] = len(encode_timestamps(bdays * 86400))
-    totals = {t: [0, 0] for t in ts_blocks}      # points, bytes
+    means = {t: [] for t in ts_blocks}
     for tok in toks["tokens"]:
         t = np.asarray(tok, dtype=np.float64)
         values = np.where(t == GAP_TOKEN, np.nan, t / SCALE)
-        for tier, ts_len in ts_blocks.items():
-            bdays, means = _tier_points(days, values, tier)
-            totals[tier][0] += len(bdays)
-            totals[tier][1] += ts_len + len(encode_values_fast(means))
-    rows = [(tier, p, b, round(b / p, 3), 0)
-            for tier, (p, b) in totals.items()]
+        for tier in ts_blocks:
+            means[tier].append(_tier_points(days, values, tier)[1])
+    rows = []
+    for tier, ts_len in ts_blocks.items():
+        p = sum(map(len, means[tier]))
+        b = ts_len * len(means[tier]) + sum(
+            map(len, encode_float_streams(means[tier])))
+        rows.append((tier, p, b, round(b / p, 3), 0))
     return pd.DataFrame(rows, columns=[
         "tier", "n_points", "n_bytes", "bytes_per_point",
         "roundtrip_mismatches"])

@@ -863,18 +863,19 @@ def lttb_downsample_tokens(tokens_df: DataFrame,
 
     Bit-identical output to ``lttb_downsample(decode_long(tokens))``
     (parity-tested): same microsecond-resolution x axis, same kernel,
-    same tie rule.
+    same tie rule; a NULL ``tokens`` row, like an all-gap one, yields
+    no rows.
     """
     import numpy as np
     import pandas as pd
 
-    from nrt_spark.tokens import GAP_TOKEN, SCALE, grid_days
+    from nrt_spark.tokens import GAP_TOKEN, SCALE, grid_days, token_array
 
     def gen(batches):
         for pdf in batches:
             docs, tss, vals = [], [], []
             for doc, tok in zip(pdf["doc_id"], pdf["tokens"]):
-                t = np.asarray(tok, dtype=np.int64)
+                t = token_array(tok)
                 days = grid_days(len(t))
                 keep = t != GAP_TOKEN
                 d, v = days[keep], t[keep].astype(np.float64) / SCALE

@@ -45,18 +45,24 @@ def decode_long(tokens_df: DataFrame) -> DataFrame:
     )
 
 
+def token_array(toks, dtype=np.int64) -> np.ndarray:
+    """One row's ``tokens`` as a 1-D array; a NULL row is an empty
+    series.  Every numpy token decoder reads rows through this."""
+    return np.asarray([] if toks is None else toks, dtype=dtype)
+
+
 def tokens_to_matrix(token_lists, max_len: int | None = None) -> np.ndarray:
     """Stack per-row token arrays into the reference's (M, K) float64 matrix.
 
-    Shorter series are right-padded with NaN; gap tokens decode to NaN.
-    This reproduces the reference's vectorization axis
-    (nrt/monitor/__init__.py:192) inside a grouped UDF.
+    Shorter series are right-padded with NaN; gap tokens decode to NaN;
+    a NULL row is an all-NaN column.  This reproduces the reference's
+    vectorization axis (nrt/monitor/__init__.py:192) inside a grouped UDF.
     """
+    token_lists = [token_array(t, np.float64) for t in token_lists]
     K = len(token_lists)
     M = max_len or (max((len(t) for t in token_lists), default=0))
     y = np.full((M, K), np.nan, dtype=np.float64)
-    for k, toks in enumerate(token_lists):
-        a = np.asarray(toks, dtype=np.float64)
+    for k, a in enumerate(token_lists):
         a[a == GAP_TOKEN] = np.nan
         y[: len(a), k] = a / SCALE
     return y

@@ -21,7 +21,7 @@ def tokens(spark):
     return df
 
 
-def test_fastpath_matches_catalyst_path(spark, tokens):
+def _assert_blocks_match_catalyst(tokens):
     fast = rollup_compress_tokens(tokens).cache()
     tiers = rollup_tiers(decode_long(tokens))
     for tier, df in tiers.items():
@@ -37,6 +37,52 @@ def test_fastpath_matches_catalyst_path(spark, tokens):
         for col in ("ts_block", "val_block"):
             same = [bytes(x) == bytes(y) for x, y in zip(a[col], b[col])]
             assert all(same), f"{tier}.{col}: {same.count(False)} differ"
+    return fast
+
+
+def test_fastpath_matches_catalyst_path(spark, tokens):
+    _assert_blocks_match_catalyst(tokens)
+
+
+def test_null_tokens_row_is_empty_series(spark):
+    """A NULL ``tokens`` row is an empty series in every numpy token
+    decoder: the block and LTTB fastpaths skip it exactly like their
+    Catalyst twins (posexplode of NULL yields no rows), and the fit
+    returns it as a too-short series — also when it is alone in its
+    bucket."""
+    import pandas as pd
+
+    from nrt_spark.engine import NrtEngine, fit_bucket
+    from nrt_spark.kernels.monitors import MASK_TOO_SHORT
+    from nrt_spark.rollup import lttb_downsample, lttb_downsample_tokens
+
+    base = generate_tokens(spark, 12, n_obs=60)
+    null_row = base.limit(1).select(
+        F.lit("doc_null").alias("doc_id"),
+        F.lit(None).cast("array<int>").alias("tokens"),
+        F.lit(0).alias("n_tok"), "source")
+    df = base.unionByName(null_row).cache()
+    assert df.where(F.col("tokens").isNull()).count() == 1
+
+    fast = _assert_blocks_match_catalyst(df)
+    assert fast.where(F.col("doc_id") == "doc_null").count() == 0
+    a = (lttb_downsample(decode_long(df), n_out=10).toPandas()
+         .sort_values(["doc_id", "ts"]).reset_index(drop=True))
+    b = (lttb_downsample_tokens(df, n_out=10).toPandas()
+         .sort_values(["doc_id", "ts"]).reset_index(drop=True))
+    pd.testing.assert_frame_equal(a, b)
+    assert "doc_null" not in set(b["doc_id"])
+
+    eng = NrtEngine(spark, "ewma", num_buckets=4, trend=False,
+                    sensitivity=7.0)
+    st = eng.fit(df, history_end="2015-06-30").toPandas()
+    assert len(st) == 13
+    assert st.loc[st["doc_id"] == "doc_null", "mask"].tolist() == \
+        [MASK_TOO_SHORT]
+    alone = fit_bucket(pd.DataFrame({"doc_id": ["doc_null"],
+                                     "tokens": [None]}),
+                       0, eng.params, None)
+    assert alone["mask"].tolist() == [MASK_TOO_SHORT]
 
 
 def test_fastpath_plan_has_no_exchange(spark, tokens):
@@ -64,8 +110,7 @@ def test_int_codec_day_tier_exact_and_small(spark, tokens):
     """Day-tier means of token data are exact multiples of 1/SCALE (one
     obs per day bucket), so the scaled-int codec is lossless there and
     far smaller than float XOR."""
-    import numpy as np
-    from nrt_spark.fastpath import decode_means_int
+    from nrt_spark.gorilla import decode_scaled_streams, decode_values
     from nrt_spark.tokens import SCALE
 
     fx = rollup_compress_tokens(tokens, tiers=("day",), int_scale=SCALE) \
@@ -73,9 +118,8 @@ def test_int_codec_day_tier_exact_and_small(spark, tokens):
     ff = rollup_compress_tokens(tokens, tiers=("day",)) \
         .toPandas().sort_values("doc_id").reset_index(drop=True)
     # exact round-trip vs the float path's decoded means
-    from nrt_spark.gorilla import decode_values
-    for i in range(len(fx)):
-        vi = decode_means_int(bytes(fx["val_block"][i]), SCALE)
+    vis = decode_scaled_streams([bytes(b) for b in fx["val_block"]], SCALE)
+    for i, vi in enumerate(vis):
         vf = decode_values(bytes(ff["val_block"][i]))
         np.testing.assert_array_equal(np.isnan(vi), np.isnan(vf))
         np.testing.assert_array_equal(vi[~np.isnan(vi)], vf[~np.isnan(vf)])
