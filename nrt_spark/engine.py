@@ -17,7 +17,9 @@ the token grid, :func:`dense_from_tokens`) and ``monitor_obs``
 (long-form points on the observed days, :func:`dense_from_obs`, shared
 with the streaming operator) as a *cogrouped* UDF — one shuffle per
 side, no join stage; ``fit_bucketed``/``monitor_bucketed`` as
-``range(B) -> mapInPandas`` over bucket-partitioned files, no Exchange.
+``range(B) -> mapInPandas`` over bucket-partitioned files, no Exchange:
+one task per core, each over a contiguous range of buckets, one bucket
+at a time.
 ``report`` is a plain projection of the state table.
 
 Scale design: ``doc_id`` is hash-bucketed (``pmod(xxhash64(doc_id), B)``),
@@ -224,6 +226,20 @@ def _bucketed_columns(tokens_path: str) -> list:
     return pq.read_schema(sample).names
 
 
+def _check_bucket_dirs(path: str, num_buckets: int) -> None:
+    """Raise on the driver when ``path`` holds a ``bucket=b`` directory
+    an engine with ``num_buckets`` would never read (``b >=
+    num_buckets``): its series would be dropped silently."""
+    extra = sorted(b for b in (int(d.name.split("=", 1)[1])
+                               for d in Path(path).glob("bucket=*"))
+                   if b >= num_buckets)
+    if extra:
+        raise ValueError(
+            f"{path} has bucket directories {extra[:3]} beyond the "
+            f"engine's num_buckets={num_buckets}; write and read the "
+            "table with the same bucket count")
+
+
 def _fit_columns(params: dict, table_columns) -> list:
     """The token columns a fit reads.  The band arrays ride along only
     when the screen needs them (they double the shuffle volume); a
@@ -308,9 +324,12 @@ class NrtEngine:
             rows.groupBy("bucket")).applyInPandas(step_fn, STATE_SCHEMA)
 
     def _map_buckets(self, per_bucket) -> DataFrame:
-        """``range(B) -> mapInPandas``: each task yields
-        ``per_bucket(b)`` for its bucket ids — NO Exchange anywhere
-        (pinned in tests/test_plan_shapes.py)."""
+        """``range(B) -> mapInPandas`` with one task per core: each task
+        yields ``per_bucket(b)`` for a contiguous range of bucket ids,
+        one bucket at a time — NO Exchange anywhere (pinned in
+        tests/test_plan_shapes.py).  Every Python task pays a fixed
+        setup cost before the UDF body runs, so a task per bucket would
+        pay it B times per pass; memory per task is still one bucket."""
 
         def gen(batches):
             for pdf in batches:
@@ -319,8 +338,10 @@ class NrtEngine:
                     if len(out):
                         yield out
 
+        tasks = min(self.num_buckets,
+                    self.spark.sparkContext.defaultParallelism)
         buckets = self.spark.range(0, self.num_buckets, 1,
-                                   numPartitions=self.num_buckets)
+                                   numPartitions=tasks)
         return buckets.mapInPandas(gen, STATE_SCHEMA)
 
     # ------------------------------------------------------------------
@@ -386,12 +407,23 @@ class NrtEngine:
         (written by :func:`write_tokens_bucketed`, or any Iceberg
         ``bucket(N, doc_id)`` layout on a shared filesystem).
 
-        The plan is ``range(B) -> mapInPandas``: each task reads exactly
-        its bucket's parquet files and runs :func:`fit_bucket` like
-        :meth:`fit`, so the result is byte-identical.  This is the
-        cluster-shape the docstring at the top of this module promises:
-        pay the bucket shuffle once at ingest, never per pass.
+        The plan is ``range(B) -> mapInPandas`` with one task per core:
+        each task runs a contiguous range of buckets, one bucket at a
+        time, reading only that bucket's parquet files and running
+        :func:`fit_bucket` like :meth:`fit`, so the result is
+        byte-identical.  This is the cluster-shape the docstring at the
+        top of this module promises: pay the bucket shuffle once at
+        ingest, never per pass.
+
+        The table must have been written with this engine's
+        ``num_buckets``.  A ``bucket=b`` directory with
+        ``b >= num_buckets`` raises ``ValueError`` before any job runs;
+        a table written with FEWER buckets cannot be told apart from one
+        with empty hash cells by its directory names, so it is read
+        as-is: its series keep the bucket id of the directory they sit
+        in, which need not be ``pmod(xxhash64(doc_id), num_buckets)``.
         """
+        _check_bucket_dirs(tokens_path, self.num_buckets)
         params, he_day = self.params, _day_number(history_end)
         cols = _fit_columns(params, lambda: _bucketed_columns(tokens_path))
         return self._map_buckets(lambda b: fit_bucket(
@@ -401,14 +433,18 @@ class NrtEngine:
                          update_mask: bool = True) -> DataFrame:
         """Zero-shuffle monitor: state snapshot AND token table are both
         bucket-partitioned on the same ``pmod(xxhash64(doc_id), B)``
-        key, so obs ⋈ state aligns by storage layout — each task reads
-        ONE bucket's state + token files directly and folds the
-        sequential update.  No Exchange, no cogroup, no join in the
-        plan; on a real cluster this is the storage-partitioned join
-        Iceberg's bucket transform enables, expressed directly.
-        Byte-identical to :meth:`monitor` (same input, same
-        :func:`advance_bucket`).
+        key, so obs ⋈ state aligns by storage layout — each task runs a
+        contiguous range of buckets, reading one bucket's state + token
+        files at a time and folding the sequential update.  No
+        Exchange, no cogroup, no join in the plan; on a real cluster
+        this is the storage-partitioned join Iceberg's bucket transform
+        enables, expressed directly.  Byte-identical to :meth:`monitor`
+        (same input, same :func:`advance_bucket`).  Bucket directories
+        beyond ``num_buckets`` in either table raise ``ValueError`` as
+        in :meth:`fit_bucketed`.
         """
+        for path in (state_path, tokens_path):
+            _check_bucket_dirs(path, self.num_buckets)
         params = self.params
 
         def advance(b: int) -> pd.DataFrame:

@@ -370,19 +370,25 @@ def test_auto_buckets(spark, tokens):
     assert eng.fit(tokens, history_end=HISTORY_END).count() == N_DOCS
 
 
-def test_bucketed_fastpath_parity(spark, tokens, tmp_path):
+@pytest.mark.parametrize("num_buckets", [3, 7, 8])
+def test_bucketed_fastpath_parity(spark, tokens, tmp_path, num_buckets):
     """The storage-partitioned (zero-shuffle) fit/monitor must be
     byte-identical to the cogrouped path: same buckets, same kernels,
-    alignment by layout instead of Exchange."""
+    alignment by layout instead of Exchange.  The pass runs one task
+    per core (fewer buckets than cores: one task per bucket), each over
+    a contiguous range of buckets; 3, 7 and 8 buckets on local[4] are
+    fewer than, not a multiple of, and a multiple of the cores."""
     from nrt_spark.engine import write_tokens_bucketed
 
     path = str(tmp_path / "tokens_bucketed")
-    write_tokens_bucketed(tokens, path, num_buckets=8)
+    write_tokens_bucketed(tokens, path, num_buckets=num_buckets)
 
-    eng = NrtEngine(spark, "cusum", num_buckets=8, trend=False,
+    eng = NrtEngine(spark, "cusum", num_buckets=num_buckets, trend=False,
                     method="OLS")
+    tasks = min(num_buckets, spark.sparkContext.defaultParallelism)
     shuffled = eng.fit(tokens, history_end=HISTORY_END)
     bucketed = eng.fit_bucketed(path, history_end=HISTORY_END)
+    assert bucketed.rdd.getNumPartitions() == tasks
     a = shuffled.toPandas().sort_values("doc_id").reset_index(drop=True)
     b = bucketed.toPandas().sort_values("doc_id").reset_index(drop=True)
     for col in a.columns:
@@ -397,6 +403,7 @@ def test_bucketed_fastpath_parity(spark, tokens, tmp_path):
     eng.save_state(bucketed, state_path)
     mon_shuffled = eng.monitor(shuffled, tokens)
     mon_bucketed = eng.monitor_bucketed(state_path, path)
+    assert mon_bucketed.rdd.getNumPartitions() == tasks
     a = mon_shuffled.toPandas().sort_values("doc_id").reset_index(drop=True)
     b = mon_bucketed.toPandas().sort_values("doc_id").reset_index(drop=True)
     for col in ["doc_id", "mask", "process", "boundary", "n",
@@ -416,6 +423,37 @@ def test_bucketed_fastpath_missing_bucket(spark, tmp_path):
     eng = NrtEngine(spark, "ewma", num_buckets=8, trend=False)
     state = eng.fit_bucketed(path, history_end=HISTORY_END)
     assert state.count() == 3
+
+
+def test_bucketed_more_buckets_than_engine_raise(spark, tokens, tmp_path):
+    """A bucketed table or state snapshot with bucket directories the
+    engine never reads (written with more buckets) fails on the driver
+    before any job, instead of silently dropping those series."""
+    from nrt_spark.engine import write_tokens_bucketed
+
+    tok8, tok16 = str(tmp_path / "tok8"), str(tmp_path / "tok16")
+    write_tokens_bucketed(tokens, tok8, num_buckets=8)
+    write_tokens_bucketed(tokens, tok16, num_buckets=16)
+    eng8 = NrtEngine(spark, "ewma", num_buckets=8, trend=False)
+    eng16 = NrtEngine(spark, "ewma", num_buckets=16, trend=False)
+    st8, st16 = str(tmp_path / "st8"), str(tmp_path / "st16")
+    eng8.save_state(eng8.fit_bucketed(tok8, history_end=HISTORY_END), st8)
+    eng16.save_state(eng16.fit_bucketed(tok16, history_end=HISTORY_END),
+                     st16)
+
+    calls = {
+        "fit_bucketed tokens": lambda: eng8.fit_bucketed(
+            tok16, history_end=HISTORY_END),
+        "monitor_bucketed tokens": lambda: eng8.monitor_bucketed(st8, tok16),
+        "monitor_bucketed state": lambda: eng8.monitor_bucketed(st16, tok8),
+    }
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup
+    for name, call in calls.items():
+        before = jobs(None)
+        with pytest.raises(ValueError, match="num_buckets=8"):
+            call()
+        assert jobs(None) == before, name
+    assert eng8.monitor_bucketed(st8, tok8).count() == N_DOCS
 
 
 def test_bucketed_monitor_idempotent(spark, tokens, tmp_path):
