@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from nrt_spark.kernels.stats import nanlstsq, mad, bisquare
+from nrt_spark.kernels.stats import nanlstsq, predict, mad, bisquare
 from nrt_spark.kernels.efp import history_roc, REC_CUSUM_CRIT_005
 
 _F32_EPS = float(np.finfo(np.float32).eps)
@@ -23,8 +23,7 @@ def ols(X: np.ndarray, y: np.ndarray):
         beta (N, K), residuals (M, K) = X @ beta - y (NaN where y is NaN).
     """
     beta = nanlstsq(X, y)
-    residuals = X @ beta - y
-    return beta, residuals
+    return beta, predict(X, beta) - y
 
 
 def weighted_ols(X: np.ndarray, y: np.ndarray, w: np.ndarray):
@@ -177,5 +176,4 @@ def roc_stable_fit(X: np.ndarray, y: np.ndarray, dates: np.ndarray,
         X_st, y_st = Xs[stable_idx:], ys[stable_idx:]
         beta[:, k] = np.linalg.solve(X_st.T @ X_st, X_st.T @ y_st)
         fit_start[k] = ds[stable_idx]
-    residuals = X @ beta - y
-    return beta, residuals, is_stable, fit_start
+    return beta, predict(X, beta) - y, is_stable, fit_start

@@ -23,7 +23,7 @@ from __future__ import annotations
 import numpy as np
 
 from nrt_spark.kernels.regressors import regressors_for_days
-from nrt_spark.kernels.stats import nan_percentile_axis0
+from nrt_spark.kernels.stats import nanmean, nanstd, nansum, predict
 from nrt_spark.kernels.fit import ols, rirls, ccdc_stable_fit, roc_stable_fit
 from nrt_spark.kernels.outliers import shewhart_screen, ccdc_rirls_screen
 from nrt_spark.kernels.efp import (
@@ -207,7 +207,7 @@ def _finalize_monitor_state(monitor, params, state, cols, resid_flat,
     if monitor == "ewma":
         # reference ewma.py:58-84
         lam = params["lambda_"]
-        sigma = np.nanstd(resid_flat, axis=0)
+        sigma = nanstd(resid_flat)
         boundary = params["sensitivity"] * sigma * np.sqrt(lam / (2 - lam))
         proc = np.zeros(cols.size)
         for row in resid_flat:                       # sequential fold, NaN passthrough
@@ -220,14 +220,14 @@ def _finalize_monitor_state(monitor, params, state, cols, resid_flat,
     elif monitor in ("cusum", "mosum"):
         # reference cusum.py:83-114 / mosum.py:104-139
         histsize = np.sum(~np.isnan(resid_flat), axis=0)
-        sigma = np.nanstd(resid_flat, axis=0, ddof=n_coef)
+        sigma = nanstd(resid_flat, ddof=n_coef)
         with np.errstate(divide="ignore", invalid="ignore"):
             resid_norm = resid_flat / (sigma * np.sqrt(histsize))
         state["histsize"][cols] = histsize
         state["n"][cols] = histsize
         state["sigma"][cols] = sigma
         if monitor == "cusum":
-            state["process"][cols] = np.nancumsum(resid_norm, axis=0)[-1]
+            state["process"][cols] = nansum(resid_norm)
         else:
             winsize = np.floor(histsize * params["h"]).astype(np.int64)
             state["winsize"][cols] = winsize
@@ -235,14 +235,14 @@ def _finalize_monitor_state(monitor, params, state, cols, resid_flat,
             window = np.zeros((window_flat.shape[0], K))
             window[:, cols] = window_flat
             state["window"] = window
-            state["process"][cols] = np.nansum(window_flat, axis=0)
+            state["process"][cols] = nansum(window_flat)
     elif monitor == "ccdc":
         # reference ccdc.py:80-137
-        state["rmse"][cols] = np.sqrt(np.nanmean(resid_flat ** 2, axis=0))
+        state["rmse"][cols] = np.sqrt(nanmean(resid_flat ** 2))
         state["boundary"][cols] = params["boundary_static"]
     elif monitor == "iqr":
         # reference iqr.py:78-87
-        q75, q25 = nan_percentile_axis0(resid_flat, np.array([75, 25]))
+        q75, q25 = np.nanpercentile(resid_flat, [75, 25], axis=0)
         state["q25"][cols] = q25
         state["q75"][cols] = q75
         state["boundary"][cols] = params["boundary_static"]
@@ -291,7 +291,7 @@ def update_process(state: dict, resid: np.ndarray, valid: np.ndarray,
         np.log(x, out=log_out, where=(x > np.exp(1)))
         state["boundary"] = np.where(valid, critval * np.sqrt(2 * log_out),
                                      state["boundary"])
-        state["process"] = np.nansum(state["window"], axis=0)
+        state["process"] = nansum(state["window"])
     elif monitor in ("ccdc", "iqr"):
         # ccdc.py:139-149 / iqr.py:89-102 — consecutive-outlier run length
         if monitor == "ccdc":
@@ -319,8 +319,7 @@ def monitor_step(state: dict, y_obs: np.ndarray, date_days: int,
     if X_row is None:
         X_row = regressors_for_days(np.array([date_days]), params["trend"],
                                     params["harmonic_order"])[0]
-    y_pred = X_row @ state["beta"]
-    resid = y_obs - y_pred
+    resid = y_obs - predict(X_row, state["beta"])
     valid = np.logical_and(state["mask"] == MASK_MONITORED, np.isfinite(y_obs))
     if params["monitor"] == "ewma":
         # ewma.py:86-88

@@ -12,6 +12,7 @@ import logging
 import numpy as np
 
 from nrt_spark.kernels.fit import ols, rirls
+from nrt_spark.kernels.stats import nanstd
 
 logger = logging.getLogger(__name__)
 
@@ -21,7 +22,7 @@ def shewhart_screen(X: np.ndarray, y: np.ndarray, L: float = 5.0, **_ignored):
     ``outliers.py:40-62``): OLS fit, then residuals beyond ``L * sigma``
     (sigma = per-series nanstd of residuals) become NaN."""
     _, residuals = ols(X, y)
-    sigma = np.nanstd(residuals, axis=0)
+    sigma = nanstd(residuals)
     out = y.copy()
     out[np.abs(residuals) > L * sigma] = np.nan
     return out

@@ -11,44 +11,55 @@ import numpy as np
 
 
 def nanlstsq(X: np.ndarray, y: np.ndarray) -> np.ndarray:
-    """Least-squares solution per series, skipping NaN observations.
+    """(N, K) least-squares coefficients of (M, K) ``y`` (NaN = missing)
+    on the (M, N) design ``X``, each series over the rows it observes
+    (reference ``nrt/stats.py:20-68``).
 
-    Solves the normal equations ``(X_s' X_s) b = X_s' y_s`` per series s,
-    where rows with NaN in that series are dropped (reference
-    ``nrt/stats.py:20-68``).  Series sharing the same NaN pattern are
-    batched into a single multi-RHS solve.
-
-    Args:
-        X: (M, N) design matrix.
-        y: (M, K) matrix of dependent variables (NaN = missing).
-
-    Returns:
-        (N, K) float64 array of coefficients.
-    """
+    One stacked product of each series' ``[X | y_s]`` (NaN rows zeroed)
+    with itself gives all K normal equations, one stacked solve all K
+    ``b_s``; every slice has the same shape and strides at any K."""
     X = np.asarray(X, dtype=np.float64)
     y = np.asarray(y, dtype=np.float64)
-    M, K = y.shape
-    beta = np.zeros((X.shape[1], K), dtype=np.float64)
-    isna = np.isnan(y)
-    if not isna.any():
-        # One factorization, K right-hand sides.
-        beta[:] = np.linalg.solve(X.T @ X, X.T @ y)
-        return beta
-    # Group series by identical NaN pattern so each distinct pattern costs
-    # one factorization (most real batches have few distinct gap patterns).
-    pattern_ids = {}
-    groups: dict[int, list[int]] = {}
-    for k in range(K):
-        key = isna[:, k].tobytes()
-        gid = pattern_ids.setdefault(key, len(pattern_ids))
-        groups.setdefault(gid, []).append(k)
-    for key, gid in pattern_ids.items():
-        cols = groups[gid]
-        keep = ~np.frombuffer(key, dtype=bool)
-        Xs = X[keep]
-        ys = y[np.ix_(keep, cols)]
-        beta[:, cols] = np.linalg.solve(Xs.T @ Xs, Xs.T @ ys)
-    return beta
+    (M, N), K = X.shape, y.shape[1]
+    valid = ~np.isnan(y)
+    A = np.concatenate([np.broadcast_to(X, (K, M, N)),
+                        np.where(valid, y, 0.0).T[:, :, None]], axis=2)
+    A *= valid.T[:, :, None]
+    G = A.transpose(0, 2, 1) @ A
+    return np.linalg.solve(G[:, :N, :N], G[:, :N, N:])[:, :, 0].T
+
+
+def predict(X: np.ndarray, beta: np.ndarray) -> np.ndarray:
+    """``X @ beta`` for (M, N) or (N,) X and (N, K) beta, folded over the
+    N coefficients in order (BLAS picks its summation order by K)."""
+    y = X[..., 0, None] * beta[0]
+    for j in range(1, beta.shape[0]):
+        y += X[..., j, None] * beta[j]
+    return y
+
+
+def nansum(a: np.ndarray) -> np.ndarray:
+    """Axis-0 sum skipping NaN, folded row by row (``np.nansum(axis=0)``
+    sums a lone column pairwise but several columns row by row)."""
+    out = np.zeros(np.shape(a)[1:])
+    for row in np.where(np.isnan(a), 0.0, a):
+        out += row
+    return out
+
+
+def nanmean(a: np.ndarray) -> np.ndarray:
+    """Axis-0 mean skipping NaN, on :func:`nansum` (NaN for no values)."""
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return nansum(a) / np.count_nonzero(~np.isnan(a), axis=0)
+
+
+def nanstd(a: np.ndarray, ddof: int = 0) -> np.ndarray:
+    """``np.nanstd(a, axis=0, ddof=ddof)`` on :func:`nansum`."""
+    n = np.count_nonzero(~np.isnan(a), axis=0)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        dev = a - nansum(a) / n
+        return np.sqrt(np.where(n > ddof, nansum(dev * dev) / (n - ddof),
+                                np.nan))
 
 
 def mad(resid: np.ndarray, c: float = 0.6745) -> float:
@@ -77,9 +88,3 @@ def erfcc(x: float) -> float:
 def ncdf(x: float) -> float:
     """Standard normal CDF via ``erfcc`` (reference ``nrt/stats.py:121-127``)."""
     return 1.0 - 0.5 * erfcc(x / (2.0 ** 0.5))
-
-
-def nan_percentile_axis0(arr: np.ndarray, percentiles) -> np.ndarray:
-    """``np.nanpercentile(arr, percentiles, axis=0)`` with the same linear
-    interpolation the reference uses (``nrt/stats.py:131-154``)."""
-    return np.nanpercentile(arr, np.asarray(percentiles), axis=0)

@@ -1,9 +1,7 @@
 """Structured Streaming monitor: per-bucket stateful sequential updates.
 
 The batch engine's cogrouped monitor re-expressed as a stateful
-streaming operator (``applyInPandasWithState``, with a
-``transformWithStateInPandas`` variant for environments that ship
-protobuf — this container does not):
+streaming operator, ``applyInPandasWithState``:
 
 - **key = bucket** (hash of doc_id), not doc_id: each state value holds
   the *whole bucket's* per-series state (pickled kernel-state blob), so

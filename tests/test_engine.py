@@ -68,9 +68,15 @@ ENGINE_OVERRIDES = {
 }
 
 
-@pytest.mark.parametrize("monitor", ["ewma", "cusum", "mosum", "ccdc", "iqr"])
-def test_engine_matches_oracle(spark, tokens, monitor):
-    eng = NrtEngine(spark, monitor, num_buckets=8, **ENGINE_OVERRIDES[monitor])
+# [monitor] is 8 buckets (about 8 series each); [monitor-64] is about one
+# series per bucket, the width at which a batch-dependent kernel differs
+# most from the oracle's single 60-series batch.
+@pytest.mark.parametrize("monitor,num_buckets", [
+    pytest.param(m, b, id=m if b == 8 else f"{m}-{b}")
+    for b in (8, 64) for m in ENGINE_OVERRIDES])
+def test_engine_matches_oracle(spark, tokens, monitor, num_buckets):
+    eng = NrtEngine(spark, monitor, num_buckets=num_buckets,
+                    **ENGINE_OVERRIDES[monitor])
     state_df = eng.fit(tokens, history_end=HISTORY_END)
     final = eng.monitor(state_df, tokens).toPandas().sort_values(
         "doc_id").reset_index(drop=True)

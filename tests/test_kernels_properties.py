@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from nrt_spark.kernels.stats import nanlstsq
@@ -32,8 +33,9 @@ def test_ewma_fold_equals_closed_form(vals, seed):
        st.integers(min_value=2, max_value=5),
        st.integers(min_value=1, max_value=6))
 def test_nanlstsq_pattern_grouping_invariant(seed, k_series, nan_tenths):
-    """Grouped multi-RHS solves equal naive per-series solves for any
-    NaN pattern (the grouping is a pure optimization)."""
+    """The stacked per-series normal-equation solve equals a naive solve
+    on each series' observed rows, for any NaN pattern (zeroing the rows
+    a series does not observe is the same as dropping them)."""
     rng = np.random.RandomState(seed % 100000)
     M = 40
     X = np.c_[np.ones(M), np.linspace(0, 1, M), np.cos(np.linspace(0, 6, M))]
@@ -98,6 +100,92 @@ def test_monitor_chunked_equals_full(monitor, cut, seed):
                                           err_msg=f"{monitor}.{key}")
         else:
             np.testing.assert_array_equal(a, b, err_msg=f"{monitor}.{key}")
+
+
+def _pin_inputs(K=60, n_obs=130):
+    """K generator series (harmonic signal, gaps, planted breaks and cloud
+    outliers, green/swir bands) as (M, K) matrices on the token grid."""
+    import pandas as pd
+
+    from nrt_spark.datagen import _gen_batch
+    from nrt_spark.tokens import grid_days
+
+    rng = np.random.default_rng(11)
+    ids = pd.DataFrame({"doc_id": [f"doc{k}" for k in range(K)],
+                        "seed64": rng.integers(-2 ** 63, 2 ** 63 - 1, K),
+                        "src_u": rng.random(K)})
+    pdf = _gen_batch(ids, n_obs, break_frac=0.5, gap_frac=0.08, noise=0.02,
+                     bands=True, outlier_frac=0.05)
+    return grid_days(n_obs), tuple(tokens_to_matrix(list(pdf[c]))
+                                   for c in ("tokens", "green_tokens",
+                                             "swir_tokens"))
+
+
+_PIN_CASES = {
+    "ewma": ("ewma", {}),
+    "ewma-notrend": ("ewma", {"trend": False}),
+    "cusum": ("cusum", {"method": "OLS"}),
+    "cusum-notrend": ("cusum", {"method": "OLS", "trend": False}),
+    "mosum": ("mosum", {"method": "OLS"}),
+    "mosum-notrend": ("mosum", {"method": "OLS", "trend": False}),
+    "ccdc": ("ccdc", {}),
+    "ccdc-ols": ("ccdc", {"method": "OLS"}),
+    "iqr": ("iqr", {}),
+    "rirls": ("cusum", {"method": "RIRLS"}),
+    "ccdc-rirls-screen": ("ccdc", {"screen_outliers": "CCDC_RIRLS"}),
+}
+
+
+@pytest.mark.parametrize("case", list(_PIN_CASES))
+def test_monitor_state_independent_of_batch_width(case, monkeypatch):
+    """A series' fitted and monitored state is bit-identical whatever
+    other series share its batch: K=60 in one call equals the
+    concatenation of slices of width 1..7 on every state array.  This is
+    what lets the engine (one batch per hash bucket) equal the oracle
+    (one batch for everything) byte for byte."""
+    import functools
+
+    from nrt_spark.kernels import monitors
+    from nrt_spark.kernels.monitors import (fit_state, resolve_params,
+                                            run_monitor)
+
+    # The design matrix depends on the dates alone; build it once per
+    # grid instead of in each of the ~300 calls below.
+    build = monitors.regressors_for_days
+    cached = functools.lru_cache(
+        lambda d, trend, order: build(np.frombuffer(d, dtype=np.int64),
+                                      trend, order))
+    monkeypatch.setattr(monitors, "regressors_for_days",
+                        lambda days, trend, order: cached(
+                            np.asarray(days, dtype=np.int64).tobytes(),
+                            trend, order))
+    monitor, overrides = _PIN_CASES[case]
+    params = resolve_params(monitor, **overrides)
+    days, (y, green, swir) = _pin_inputs()
+    hist = 100
+
+    def run(cols):
+        bands = ({"green": green[:hist, cols], "swir": swir[:hist, cols]}
+                 if params["screen_outliers"] == "CCDC_RIRLS" else {})
+        state = fit_state(y[:hist, cols], days[:hist], params, **bands)
+        return run_monitor(state, y[hist:, cols], days[hist:], params)
+
+    def bits(a):
+        a = np.asarray(a)
+        return (np.where(np.isnan(a), np.nan, a).view(np.int64)
+                if a.dtype.kind == "f" else a)
+
+    K = y.shape[1]
+    full = run(np.arange(K))
+    depth = full["window"].shape[0]
+    for width in range(1, 8):
+        parts = [run(np.arange(K)[i:i + width]) for i in range(0, K, width)]
+        for key, want in full.items():
+            got = np.concatenate(
+                [np.pad(p[key], ((0, depth - len(p[key])), (0, 0)))
+                 if key == "window" else p[key] for p in parts], axis=-1)
+            np.testing.assert_array_equal(bits(got), bits(want),
+                                          err_msg=f"{key} at width {width}")
 
 
 @settings(max_examples=25, deadline=None)

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import warnings
+
 import numpy as np
 import pytest
 
@@ -17,15 +19,6 @@ def test_ncdf_vs_erfc(x):
     np.testing.assert_allclose(st.ncdf(x), exact, rtol=1e-6)
 
 
-def test_nan_percentile():
-    rng = np.random.RandomState(7)
-    data = rng.random_sample((20, 40))
-    data[rng.random_sample((20, 40)) < 0.1] = np.nan
-    got = st.nan_percentile_axis0(data, np.array([75, 25]))
-    want = np.nanpercentile(data, [75, 25], 0)
-    np.testing.assert_allclose(got, want)
-
-
 def test_nanlstsq_matches_per_series_solve():
     rng = np.random.RandomState(3)
     X = np.c_[np.ones(50), np.arange(50, dtype=float)]
@@ -37,6 +30,33 @@ def test_nanlstsq_matches_per_series_solve():
         Xs, ys = X[keep], y[keep, k]
         want = np.linalg.solve(Xs.T @ Xs, Xs.T @ ys)
         np.testing.assert_allclose(beta[:, k], want, rtol=1e-10)
+
+
+def test_row_folds_match_numpy():
+    """nansum / nanmean / nanstd and predict reorder numpy's sums only:
+    equal to np.nan* over axis 0 and to ``X @ beta`` up to rounding,
+    including an all-NaN column, ddof >= the count, one column and no
+    rows."""
+    rng = np.random.RandomState(5)
+    a = rng.normal(size=(90, 7))
+    a[rng.random_sample(a.shape) < 0.2] = np.nan
+    a[:, 3] = np.nan
+    a[3:, 4] = np.nan                                   # 3 values < ddof + 1
+    with warnings.catch_warnings():      # numpy's empty-slice warnings
+        warnings.simplefilter("ignore", RuntimeWarning)
+        for got, want in [(st.nansum(a), np.nansum(a, axis=0)),
+                          (st.nanmean(a), np.nanmean(a, axis=0)),
+                          (st.nanstd(a), np.nanstd(a, axis=0)),
+                          (st.nanstd(a, ddof=5), np.nanstd(a, axis=0, ddof=5)),
+                          (st.nanstd(a[:, :1]), np.nanstd(a[:, :1], axis=0))]:
+            np.testing.assert_allclose(got, want, rtol=1e-13, atol=1e-15)
+    np.testing.assert_array_equal(st.nansum(np.zeros((0, 4))), np.zeros(4))
+    X = rng.normal(size=(40, 6))
+    beta = rng.normal(size=(6, 9))
+    np.testing.assert_allclose(st.predict(X, beta), X @ beta, rtol=1e-13,
+                               atol=1e-14)
+    np.testing.assert_allclose(st.predict(X[5], beta), X[5] @ beta,
+                               rtol=1e-13, atol=1e-14)
 
 
 def test_mad_bisquare():

@@ -1,6 +1,6 @@
 """Streaming monitor vs the batch engine: feeding the monitor period as
-file-source micro-batches through transformWithStateInPandas must land
-in exactly the batch engine's final state."""
+file-source micro-batches through applyInPandasWithState must land in
+exactly the batch engine's final state."""
 
 from __future__ import annotations
 
