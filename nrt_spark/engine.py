@@ -328,8 +328,11 @@ class NrtEngine:
         yields ``per_bucket(b)`` for a contiguous range of bucket ids,
         one bucket at a time — NO Exchange anywhere (pinned in
         tests/test_plan_shapes.py).  Every Python task pays a fixed
-        setup cost before the UDF body runs, so a task per bucket would
-        pay it B times per pass; memory per task is still one bucket."""
+        cost before the UDF body runs (scheduling, the Arrow handshake,
+        closure unpickling; ~0.1 s of process-tree CPU on a 4-core
+        host, see README "Known limitations"), so a task per bucket
+        would pay it B times per pass; memory per task is still one
+        bucket."""
 
         def gen(batches):
             for pdf in batches:

@@ -3,8 +3,14 @@
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+#: the directory ``nrt_spark`` imports from, put on the Python workers'
+#: path so that the daemon module (``nrt_spark.pydaemon``) imports from
+#: any cwd
+_PACKAGE_ROOT = str(Path(__file__).resolve().parent.parent)
 
 #: app ids whose runtime bootstrap (_warm_runtime) already ran — the
 #: warm-up touches no user data, so this is plan/runtime state only
@@ -111,7 +117,9 @@ def get_spark(cores: int | str = "*", app_name: str = "nrt_spark",
         shuffle_partitions: defaults to 2x cores (or 32 for ``*``) — sized
             for local mode, not the 200 cluster default.
         driver_memory: local mode runs everything in the driver JVM.
-        extra_conf: additional ``spark.*`` settings.
+        extra_conf: additional ``spark.*`` settings; a
+            ``spark.executorEnv.PYTHONPATH`` is kept, with the package
+            root appended.
     """
     # Keep BLAS single-threaded inside tasks: Spark tasks are the
     # parallelism axis (same rationale as the reference's numba guidance,
@@ -160,8 +168,16 @@ def get_spark(cores: int | str = "*", app_name: str = "nrt_spark",
         .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
+        # Python workers import pyspark from the installed package, not
+        # from the JVM-supplied archives whose zipimporters each task's
+        # importlib.invalidate_caches() would rescan (see pydaemon.py)
+        .config("spark.python.daemon.module", "nrt_spark.pydaemon")
     )
-    for k, v in (extra_conf or {}).items():
+    extra_conf = dict(extra_conf or {})
+    extra_conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        filter(None, [extra_conf.get("spark.executorEnv.PYTHONPATH"),
+                      _PACKAGE_ROOT]))
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -137,28 +137,15 @@ _PIN_CASES = {
 
 
 @pytest.mark.parametrize("case", list(_PIN_CASES))
-def test_monitor_state_independent_of_batch_width(case, monkeypatch):
+def test_monitor_state_independent_of_batch_width(case):
     """A series' fitted and monitored state is bit-identical whatever
     other series share its batch: K=60 in one call equals the
     concatenation of slices of width 1..7 on every state array.  This is
     what lets the engine (one batch per hash bucket) equal the oracle
     (one batch for everything) byte for byte."""
-    import functools
-
-    from nrt_spark.kernels import monitors
     from nrt_spark.kernels.monitors import (fit_state, resolve_params,
                                             run_monitor)
 
-    # The design matrix depends on the dates alone; build it once per
-    # grid instead of in each of the ~300 calls below.
-    build = monitors.regressors_for_days
-    cached = functools.lru_cache(
-        lambda d, trend, order: build(np.frombuffer(d, dtype=np.int64),
-                                      trend, order))
-    monkeypatch.setattr(monitors, "regressors_for_days",
-                        lambda days, trend, order: cached(
-                            np.asarray(days, dtype=np.int64).tobytes(),
-                            trend, order))
     monitor, overrides = _PIN_CASES[case]
     params = resolve_params(monitor, **overrides)
     days, (y, green, swir) = _pin_inputs()
@@ -301,3 +288,41 @@ def test_lttb_select_invariants(values, n_out):
     assert idx[0] == 0 and idx[-1] == len(v) - 1
     assert (np.diff(idx) > 0).all()
     np.testing.assert_array_equal(idx, lttb_select(days, v, n_out))
+
+
+def test_day_decimal_years_match_pandas():
+    """The integer-day decimal year equals ``decimal_years`` bit for bit
+    on every day of 1900-2099 (leap centuries, both epoch sides)."""
+    from nrt_spark.kernels.regressors import (EPOCH, _day_decimal_years,
+                                              decimal_years)
+
+    days = np.arange(np.datetime64("1900-01-01") - EPOCH,
+                     np.datetime64("2100-01-01") - EPOCH).astype(np.int64)
+    want = decimal_years(EPOCH + days.astype("timedelta64[D]"))
+    got = _day_decimal_years(days)
+    np.testing.assert_array_equal(got.view(np.int64), want.view(np.int64))
+
+
+@pytest.mark.parametrize("order", [0, 1, 2, 3])
+@pytest.mark.parametrize("trend", [True, False])
+def test_regressors_for_days_equal_build_regressors(trend, order):
+    """``regressors_for_days(days)`` is ``build_regressors(EPOCH + days)``
+    bit for bit, unsorted input included, on grids that cross leap
+    days and year ends before and after the epoch."""
+    from nrt_spark.kernels.regressors import (EPOCH, build_regressors,
+                                              regressors_for_days)
+
+    rng = np.random.default_rng(order)
+    grids = [
+        16436 + 8 * np.arange(130),                       # the engine grid
+        np.arange(-25567, 47482, 11),                     # 1900 .. 2099
+        np.array([-1, 0, 59, 365, 789, 790, 11016, 11017, 10956, 10957]),
+        rng.permutation(np.arange(10950, 11400)),         # 1999 .. 2001
+        np.array([16436]),
+    ]
+    for days in grids:
+        got = regressors_for_days(days, trend, order)
+        want = build_regressors(EPOCH + days.astype("timedelta64[D]"),
+                                trend=trend, harmonic_order=order)
+        assert got.shape == want.shape == (len(days), 1 + trend + 2 * order)
+        np.testing.assert_array_equal(got.view(np.int64), want.view(np.int64))
