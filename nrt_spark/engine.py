@@ -156,11 +156,13 @@ def dense_from_tokens(state_pdf: pd.DataFrame, toks: pd.DataFrame):
     token_lists = [t if t is not None and not isinstance(t, float) else []
                    for t in tokens]
     y = tokens_to_matrix(token_lists)
+    days = grid_days(y.shape[0])
+    # each row's last grid day, days[len - 1]; 0 for an empty row
+    lens = np.fromiter(map(len, token_lists), np.int64, len(token_lists))
     new_last = np.maximum(
         state_pdf["last_day"].to_numpy(dtype=np.int64, na_value=0),
-        np.array([grid_days(len(t))[-1] if len(t) else 0
-                  for t in token_lists]))
-    return y, grid_days(y.shape[0]), new_last
+        np.concatenate([[0], days])[lens])
+    return y, days, new_last
 
 
 def dense_from_obs(state_pdf: pd.DataFrame, obs: pd.DataFrame):

@@ -2,7 +2,14 @@
 
 from __future__ import annotations
 
+import functools
+import hashlib
+import logging
 import os
+import shutil
+import subprocess
+import tempfile
+import zipfile
 from pathlib import Path
 
 from pyspark.sql import SparkSession
@@ -11,6 +18,13 @@ from pyspark.sql import SparkSession
 #: path so that the daemon module (``nrt_spark.pydaemon``) imports from
 #: any cwd
 _PACKAGE_ROOT = str(Path(__file__).resolve().parent.parent)
+
+#: the ``file:`` filesystem the session uses when its jar builds: Hadoop's
+#: checksummed local filesystem with modes set by chmod(2) in the JVM,
+#: not by a forked ``chmod`` per file and directory
+LOCAL_FS_CLASS = "nrt_spark.jvm.PosixLocalFileSystem"
+_LOCAL_FS_SOURCE = Path(__file__).resolve().parent / "jvm" / \
+    "PosixLocalFileSystem.java"
 
 #: app ids whose runtime bootstrap (_warm_runtime) already ran — the
 #: warm-up touches no user data, so this is plan/runtime state only
@@ -106,6 +120,83 @@ def _warm_runtime(spark: SparkSession) -> None:
      .select("id").union(cp.select("id")).distinct().count())
 
 
+@functools.lru_cache(maxsize=None)
+def _local_fs_jar(spark_home: str, cache_dir: str) -> str | None:
+    """The jar of ``LOCAL_FS_CLASS`` for the Hadoop in ``spark_home``,
+    compiled on first use into ``cache_dir`` and reused by every later
+    session on the host; None (after one warning) when ``javac`` is
+    missing, the compile fails or the cache is not writable."""
+    try:
+        javac = shutil.which("javac")
+        if javac is None:
+            raise FileNotFoundError("javac not found on PATH")
+        hadoop = max(Path(spark_home, "jars").glob(
+            "hadoop-client-api-*.jar"), default=None)
+        if hadoop is None:
+            raise FileNotFoundError(
+                f"no hadoop-client-api jar in {spark_home}/jars")
+        # the JDK's release file names its version (reading it starts
+        # no process, unlike ``javac -version``)
+        release = Path(os.path.realpath(javac)).parent.parent / "release"
+        key = hashlib.sha256(b"\0".join([
+            _LOCAL_FS_SOURCE.read_bytes(), hadoop.name.encode(),
+            release.read_bytes()])).hexdigest()[:16]
+        jar = Path(cache_dir, f"posix-localfs-{key}.jar")
+        if jar.is_file():
+            return str(jar)
+        jar.parent.mkdir(parents=True, exist_ok=True)
+        with tempfile.TemporaryDirectory(dir=jar.parent) as tmp:
+            classes = Path(tmp, "classes")
+            subprocess.run([javac, "--release", "17", "-cp", str(hadoop),
+                            "-d", str(classes), str(_LOCAL_FS_SOURCE)],
+                           capture_output=True, text=True, check=True,
+                           timeout=300)
+            part = Path(tmp, jar.name)
+            with zipfile.ZipFile(part, "w") as zf:
+                for f in sorted(classes.rglob("*.class")):
+                    zf.write(f, f.relative_to(classes).as_posix())
+            os.replace(part, jar)     # atomic: a reader sees all or none
+        return str(jar)
+    except (OSError, subprocess.SubprocessError) as e:
+        detail = getattr(e, "stderr", None) or ""
+        logging.getLogger(__name__).warning(
+            "no in-JVM chmod for the file: filesystem (%s%s); local writes "
+            "fork a chmod process per file and directory", e,
+            f": {detail.strip()}" if detail else "")
+        return None
+
+
+def _jvm_can_load(jar: str) -> bool:
+    """Whether a session built now can load classes from ``jar``: a JVM
+    this process already launched keeps the class path it started with."""
+    from pyspark import SparkContext
+
+    jvm = SparkContext._jvm
+    return jvm is None or jar in jvm.java.lang.System.getProperty(
+        "java.class.path").split(os.pathsep)
+
+
+def _extra_conf(extra_conf: dict | None) -> dict:
+    """The caller's ``extra_conf`` with the package root appended to the
+    workers' ``PYTHONPATH`` and, when its jar builds, the in-JVM chmod
+    ``file:`` filesystem; a caller's ``fs.file.impl`` wins and a
+    caller's ``extraClassPath`` is kept, with the jar appended."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    conf = dict(extra_conf or {})
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        filter(None, [conf.get("spark.executorEnv.PYTHONPATH"),
+                      _PACKAGE_ROOT]))
+    cache = Path(os.environ.get("XDG_CACHE_HOME")
+                 or Path.home() / ".cache", "nrt_spark")
+    jar = _local_fs_jar(_find_spark_home(), str(cache))
+    if jar is not None and _jvm_can_load(jar):
+        conf.setdefault("spark.hadoop.fs.file.impl", LOCAL_FS_CLASS)
+        conf["spark.driver.extraClassPath"] = os.pathsep.join(
+            filter(None, [conf.get("spark.driver.extraClassPath"), jar]))
+    return conf
+
+
 def get_spark(cores: int | str = "*", app_name: str = "nrt_spark",
               shuffle_partitions: int | None = None,
               driver_memory: str = "48g", extra_conf: dict | None = None
@@ -119,7 +210,9 @@ def get_spark(cores: int | str = "*", app_name: str = "nrt_spark",
         driver_memory: local mode runs everything in the driver JVM.
         extra_conf: additional ``spark.*`` settings; a
             ``spark.executorEnv.PYTHONPATH`` is kept, with the package
-            root appended.
+            root appended, and so is a ``spark.driver.extraClassPath``,
+            with the ``file:`` filesystem's jar appended (see
+            ``_extra_conf``).
     """
     # Keep BLAS single-threaded inside tasks: Spark tasks are the
     # parallelism axis (same rationale as the reference's numba guidance,
@@ -173,11 +266,7 @@ def get_spark(cores: int | str = "*", app_name: str = "nrt_spark",
         # importlib.invalidate_caches() would rescan (see pydaemon.py)
         .config("spark.python.daemon.module", "nrt_spark.pydaemon")
     )
-    extra_conf = dict(extra_conf or {})
-    extra_conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
-        filter(None, [extra_conf.get("spark.executorEnv.PYTHONPATH"),
-                      _PACKAGE_ROOT]))
-    for k, v in extra_conf.items():
+    for k, v in _extra_conf(extra_conf).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -191,8 +280,6 @@ def get_spark(cores: int | str = "*", app_name: str = "nrt_spark",
                 # the bootstrap is an optimization, not a requirement:
                 # a session configured in a way the ritual's jobs cannot
                 # run under must still be handed to the caller
-                import logging
-
                 logging.getLogger(__name__).warning(
                     "session runtime bootstrap failed; continuing with "
                     "a cold session", exc_info=True)
