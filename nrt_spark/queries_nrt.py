@@ -497,7 +497,7 @@ def nrt_gorilla_stats(spark, sf_dir):
     tiers = rollup_tiers(decode_long(toks))
     rows = []
     for tier, df in tiers.items():
-        blocks = compress_tier(df, value_col="mean").cache()
+        blocks = compress_tier(df, value_col="mean")
         back = decompress_tier(blocks).withColumnRenamed("value", "rt")
         orig = df.select("doc_id", "bucket_start",
                          F.col("mean").alias("ov"))

@@ -219,32 +219,31 @@ def write_tier(df: DataFrame, base_path: str, tier: str,
             "paths; object stores need the catalog-native overwrite "
             "(catalog.py)")
     if prune_stale:
-        # persist so the written-period set comes from the SAME
-        # materialization as the write (no second run of the full
-        # upstream plan inside the writer-lock window, no chance of a
-        # divergent set under a non-deterministic source)
-        out = out.persist()
-    try:
-        out.write.mode("overwrite").partitionBy("period") \
-            .option("partitionOverwriteMode", "dynamic") \
-            .parquet(f"{base_path}/tier={tier}")
-        if not prune_stale:
-            return
-        written = set()
-        for r in out.select("period").distinct().collect():
-            # NULL periods are written under Hive's default-partition
-            # sentinel — map them or the prune would delete the
-            # partition this very write just produced
-            written.add("__HIVE_DEFAULT_PARTITION__"
-                        if r["period"] is None else r["period"])
-        for d in Path(f"{base_path}/tier={tier}").glob("period=*"):
-            if d.name.split("=", 1)[1] not in written:
-                log.warning("write_tier: pruning stale partition %s "
-                            "(not present in the new data)", d)
-                shutil.rmtree(d)
-    finally:
-        if prune_stale:
-            out.unpersist()
+        # materialize once so the written-period set comes from the SAME
+        # rows as the write (no second run of the full upstream plan
+        # inside the writer-lock window, no chance of a divergent set
+        # under a non-deterministic source).  An eager local checkpoint,
+        # not persist(): Spark keeps a persisted plan at its initial
+        # shuffle partition count (AQE may not coalesce a cached plan),
+        # so the write would run 64 tasks and leave 64 files per period
+        out = out.localCheckpoint(eager=True)
+    out.write.mode("overwrite").partitionBy("period") \
+        .option("partitionOverwriteMode", "dynamic") \
+        .parquet(f"{base_path}/tier={tier}")
+    if not prune_stale:
+        return
+    written = set()
+    for r in out.select("period").distinct().collect():
+        # NULL periods are written under Hive's default-partition
+        # sentinel — map them or the prune would delete the partition
+        # this very write just produced
+        written.add("__HIVE_DEFAULT_PARTITION__"
+                    if r["period"] is None else r["period"])
+    for d in Path(f"{base_path}/tier={tier}").glob("period=*"):
+        if d.name.split("=", 1)[1] not in written:
+            log.warning("write_tier: pruning stale partition %s "
+                        "(not present in the new data)", d)
+            shutil.rmtree(d)
 
 
 def _upsert_paths(tier_path: Path) -> tuple[Path, Path, Path]:
@@ -475,7 +474,14 @@ def upsert_tier(spark, base_path: str, tier: str,
     partitions; only THOSE are read, merged (one shuffle on
     (doc_id, bucket_start)) and staged — cost ∝ touched periods, not
     table size.  On Iceberg this is MERGE INTO with partition
-    predicates.
+    predicates.  The delta is small by contract, so its rollup is
+    evaluated twice (once for the periods, once inside the merge)
+    rather than persisted: a persisted plan keeps the session's
+    initial shuffle partition count (64 on local[4]), which would put
+    64 tasks under every stage that reads it and 64 files into every
+    touched period; unpersisted, AQE sizes both stages to the data.
+    ``buckets_before`` is read from the touched periods' parquet
+    footers, not counted by a job.
 
     Commit protocol (plain parquet): the merged periods are written to a
     dot-prefixed staging directory, a manifest records the touched
@@ -516,12 +522,10 @@ def _upsert_tier_locked(spark, base_path: str, tier: str,
     recover_tier(base_path, tier, _locked=True)
     token = Path(commit_token) if commit_token is not None else None
     delta = rollup_raw(delta_long, tier, with_last_ts=True) \
-        .withColumn("period", F.date_format("bucket_start", "yyyy-MM")) \
-        .persist()
+        .withColumn("period", F.date_format("bucket_start", "yyyy-MM"))
     periods = sorted(r["period"] for r in
                      delta.select("period").distinct().collect())
     if not periods:
-        delta.unpersist()
         if token is not None:
             token.parent.mkdir(parents=True, exist_ok=True)
             token.touch()
@@ -536,7 +540,6 @@ def _upsert_tier_locked(spark, base_path: str, tier: str,
     # the exactly-once contract holds for the first batch too.
     if not any(Path(tier_path).glob("period=*")):
         n = _stage_and_publish(Path(tier_path), delta, periods, token)
-        delta.unpersist()
         return {"periods": periods, "buckets_before": 0,
                 "buckets_after": n}
     existing = (spark.read.option("basePath", tier_path).parquet(tier_path)
@@ -545,7 +548,9 @@ def _upsert_tier_locked(spark, base_path: str, tier: str,
         raise ValueError(
             "upsert_tier requires a tier written with_last_ts=True; "
             "rewrite the tier with rollup_raw(..., with_last_ts=True)")
-    buckets_before = existing.count()
+    buckets_before = _footer_rows(
+        f for p in periods
+        for f in Path(tier_path, f"period={p}").glob("*.parquet"))
     e = existing.select(
         "doc_id", "bucket_start",
         *[F.col(c).alias(f"e_{c}") for c in
@@ -580,9 +585,15 @@ def _upsert_tier_locked(spark, base_path: str, tier: str,
      .select(*ROLLUP_COLS, "last_ts", "period")
     buckets_after = _stage_and_publish(Path(tier_path), merged, periods,
                                        token)
-    delta.unpersist()
     return {"periods": periods, "buckets_before": buckets_before,
             "buckets_after": buckets_after}
+
+
+def _footer_rows(files) -> int:
+    """Row count of parquet ``files`` from their footers: metadata
+    only, no Spark job."""
+    import pyarrow.parquet as pq
+    return sum(pq.read_metadata(f).num_rows for f in files)
 
 
 def _stage_and_publish(tp: Path, frame: DataFrame, periods: list[str],
@@ -591,21 +602,30 @@ def _stage_and_publish(tp: Path, frame: DataFrame, periods: list[str],
     merge paths.  Returns the published row count.
 
     ``frame`` (which must carry a ``period`` column covering exactly
-    ``periods``) is written NEXT TO the live partitions, so its lineage
-    can safely re-read them on task retry and a crash during the write
-    leaves the table untouched.  Then: manifest (atomic tmp+rename) →
-    per-period rename publish with backups kept → COMMIT POINT = the
-    manifest's atomic retirement.  With a ``token`` the manifest
-    BECOMES the token in that one rename, so token-exists ⇔ committed
-    with no window between them."""
+    ``periods``; any other staged set raises before the manifest, with
+    nothing committed) is written NEXT TO the live partitions, so its
+    lineage can safely re-read them on task retry and a crash during
+    the write leaves the table untouched.  Then: manifest (atomic
+    tmp+rename) → per-period rename publish with backups kept → COMMIT
+    POINT = the manifest's atomic retirement.  With a ``token`` the
+    manifest BECOMES the token in that one rename, so token-exists ⇔
+    committed with no window between them."""
     staging, manifest, tmp_manifest = _upsert_paths(tp)
     tp.mkdir(parents=True, exist_ok=True)
     frame.write.mode("overwrite").partitionBy("period") \
         .parquet(str(staging))
+    staged = {d.name.split("=", 1)[1] for d in staging.glob("period=*")}
+    if staged != set(periods):
+        # the frame re-evaluates the delta, so a nondeterministic source
+        # can stage another period set than ``periods``: an extra period
+        # would be deleted with the staging dir, a missing one cannot be
+        # published — refuse before the manifest, leaving the table as is
+        shutil.rmtree(staging)
+        raise RuntimeError(
+            f"staged periods {sorted(staged)} differ from the delta's "
+            f"periods {periods}; nothing was committed")
     # row count from the staged footers: metadata-only, no second job
-    import pyarrow.parquet as pq
-    n_rows = sum(pq.ParquetFile(f).metadata.num_rows
-                 for f in staging.glob("period=*/*.parquet"))
+    n_rows = _footer_rows(staging.glob("period=*/*.parquet"))
     # manifest = the in-flight record recover_tier rolls back from;
     # written atomically (tmp + rename) AFTER staging is complete
     entries = {p: (tp / f"period={p}").exists() for p in periods}
@@ -616,11 +636,7 @@ def _stage_and_publish(tp: Path, frame: DataFrame, periods: list[str],
         backup = _upsert_backup(tp, period)
         if live.exists():
             live.rename(backup)            # kept until the commit point
-        staged_p = staging / f"period={period}"
-        if not staged_p.exists():          # defensive: the frame always
-            raise RuntimeError(            # covers every delta period
-                f"staged partition missing: {staged_p}")
-        staged_p.rename(live)
+        (staging / f"period={period}").rename(live)
     if token is not None:
         token.parent.mkdir(parents=True, exist_ok=True)
         try:

@@ -300,6 +300,11 @@ def test_upsert_tier_matches_full_recompute(spark, long_df, tmp_path):
 
     stats = upsert_tier(spark, str(tmp_path), "day", late)
     assert stats["buckets_after"] >= stats["buckets_before"]
+    # buckets_before is read from footers: the rows the touched periods
+    # held before the merge
+    assert stats["buckets_before"] == rollup_raw(early, "day").filter(
+        F.date_format("bucket_start", "yyyy-MM").isin(stats["periods"])
+    ).count()
 
     got = (spark.read.parquet(str(tmp_path / "tier=day"))
            .drop("period", "last_ts")
@@ -534,6 +539,84 @@ def test_upsert_tier_lock_single_writer(spark, long_df, tmp_path,
     assert lock.exists()                    # never unlinked (by design)
 
 
+def _stage_tasks(spark, fn) -> list:
+    """Tasks run by each stage of the jobs ``fn`` starts (a skipped
+    stage runs none)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"stage-tasks-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    st = sc.statusTracker()
+    return [st.getStageInfo(s).numCompletedTasks
+            for j in st.getJobIdsForGroup(group)
+            for s in st.getJobInfo(j).stageIds]
+
+
+def test_upsert_tier_small_delta_is_aqe_sized(spark, long_df, tmp_path):
+    """An upsert of a small delta runs no stage wider than one task per
+    core and leaves at most that many files in each touched period.  A
+    persisted delta would keep the session's 64 initial shuffle
+    partitions: 64 tasks per stage that reads it, 64 files per period."""
+    from nrt_spark.rollup import rollup_raw, upsert_tier, write_tier
+
+    split_ts = long_df.selectExpr(
+        "percentile(unix_seconds(ts), 0.9) AS c").first()["c"]
+    base = str(tmp_path)
+    write_tier(rollup_raw(long_df.filter(F.unix_seconds("ts") <= split_ts),
+                          "day", with_last_ts=True), base, "day")
+    # an uncached source, as a streamed micro-batch or a read delta is
+    delta = spark.createDataFrame(
+        long_df.filter(F.unix_seconds("ts") > split_ts).toPandas())
+    stats = {}
+    tasks = _stage_tasks(spark, lambda: stats.update(
+        upsert_tier(spark, base, "day", delta)))
+    cores = spark.sparkContext.defaultParallelism
+    assert tasks and max(tasks) <= cores, tasks
+    assert stats["periods"]
+    for p in stats["periods"]:
+        files = list((tmp_path / "tier=day" / f"period={p}")
+                     .glob("*.parquet"))
+        assert 1 <= len(files) <= cores, (p, len(files))
+
+
+def test_stage_and_publish_refuses_other_periods(spark, long_df, tmp_path):
+    """The commit guard: a frame that stages a period the caller did not
+    list (a nondeterministic delta evaluated a second time inside the
+    merge), or misses one it did, raises before the manifest — nothing
+    is committed, the table is unchanged and no staged rows are left."""
+    from nrt_spark.rollup import (_stage_and_publish, _upsert_paths,
+                                  recover_tier, rollup_raw, write_tier)
+
+    base = str(tmp_path)
+    day = rollup_raw(long_df, "day", with_last_ts=True)
+    write_tier(day, base, "day")
+    tier = tmp_path / "tier=day"
+
+    def listing():
+        return sorted((str(f.relative_to(tier)), f.stat().st_mtime_ns)
+                      for f in tier.rglob("*"))
+
+    before = listing()
+    frame = day.withColumn("period",
+                           F.date_format("bucket_start", "yyyy-MM"))
+    periods = sorted(r["period"] for r in
+                     frame.select("period").distinct().collect())
+    assert len(periods) >= 2
+    for listed in (periods[:-1], periods + ["2099-01"]):
+        with pytest.raises(RuntimeError, match="nothing was committed"):
+            _stage_and_publish(tier, frame, listed, None)
+        assert not any(p.exists() for p in _upsert_paths(tier))
+        assert listing() == before
+    assert recover_tier(base, "day") == "clean"
+
+
 def test_tier_lock_waits_out_transient_hold(tmp_path):
     """Bounded BLOCKING acquire: an expected-transient hold (the
     co-deployed streaming upserter committing a micro-batch) is waited
@@ -615,6 +698,10 @@ def test_write_tier_dynamic_prunes_stale_partitions(spark, long_df,
     left = sorted(p.name for p in
                   (tmp_path / "tier=day").glob("period=*"))
     assert left == [f"period={keep}"]
+    # ... from one AQE-sized materialization: at most one file per core
+    # (a persisted input keeps the 64 initial shuffle partitions)
+    n_files = len(list((tmp_path / "tier=day" / left[0]).glob("*.parquet")))
+    assert 1 <= n_files <= spark.sparkContext.defaultParallelism, n_files
     assert marker.exists()                  # protocol file survived
     assert (spark.read.parquet(f"{base}/tier=day")
             .select("period").distinct().count() == 1)
