@@ -1,14 +1,20 @@
 """Similarity search over embedding columns (array<float>).
 
+Every per-row dot product, norm and sign bit is computed in a
+vectorized Arrow batch UDF (numpy over a stacked (n, dim) batch); the
+Catalyst higher-order-function fold (:func:`cosine_similarity`) only
+verifies candidate pairs.
+
 - :func:`cosine_topk` — brute-force exact top-k against a probe vector,
-  entirely in Catalyst higher-order functions (``aggregate``/``zip_with``)
-  so it whole-stage-codegens; the baseline every ANN variant is checked
-  against.
+  the baseline every ANN variant is checked against.
 - :func:`lsh_assign` / :func:`lsh_topk` — random-hyperplane LSH: each
   vector gets a b-bit bucket from the signs of dot products with
   deterministic (seed-derived) hyperplanes; search touches only the probe
   bucket (scale path: bucket becomes the partition key, turning ANN into
   a partition-pruned scan).
+- :func:`ivf_train` / :func:`ivf_assign` / :func:`ivf_topk` — IVF: a
+  deterministic k-means coarse quantizer; search ranks only the
+  ``nprobe`` cells nearest the probe.
 """
 
 from __future__ import annotations
@@ -96,60 +102,21 @@ def _stack_batch(vecs: "pd.Series", dim: int
     return X, valid
 
 
-#: row-estimate ceiling for cosine_topk's pure-Catalyst HOF branch.
-#: The two branches are bit-identical (the Arrow kernel folds in
-#: dimension order precisely to mirror the HOF chain — _seqfold_dots),
-#: so the gate only picks the cheaper physical plan: below ~10^5 rows
-#: the Python-worker spin-up + Arrow round-trip dominates the batch
-#: kernel (round-7 verdict: 0.37 s HOF -> 1.5 s UDF at bench scale),
-#: while above it the interpreted per-element lambda fold loses by an
-#: order of magnitude (sf100 probe: 25x DuckDB's wall at 2M vectors).
-#: Unknown sizes (filtered/derived inputs) take the scale-safe UDF.
-COSINE_TOPK_HOF_MAX_ROWS = 100_000
-
-
 def cosine_topk(embeddings: DataFrame, probe: list[float], k: int = 10,
                 vec_col: str = "embedding", id_col: str = "vec_id"
                 ) -> DataFrame:
     """Exact top-k by cosine similarity to ``probe`` (ties broken by id).
 
-    Two physical strategies behind one result (gated on the parquet
-    footer row estimate, COSINE_TOPK_HOF_MAX_ROWS): small tables run
-    the pure-Catalyst HOF fold (no Python boundary at all); large
-    tables run ONE vectorized Arrow batch UDF over the sequential-fold
-    kernels — bit-exact with the HOF chain and the SQL oracles (see
-    _seqfold_dots): both accumulate in dimension order, both propagate
-    NULL for NULL/ragged vectors, rounding stays in Catalyst either
-    way (F.round is HALF_UP — numpy's round is banker's).  No join, no
-    shuffle except the final top-k (``orderBy ... limit`` =
-    TakeOrdered, which holds only k rows per partition).
+    ONE vectorized Arrow batch UDF over the sequential-fold kernels:
+    bit-exact with the SQL oracles' ``list_dot_product`` fold (see
+    _seqfold_dots — both accumulate in dimension order over float64).
+    Zero-norm, NaN-containing, NULL and ragged vectors get a NULL
+    cosine (NaN crosses Arrow ``from_pandas`` as NULL), so they rank
+    last.  Rounding stays in Catalyst (F.round is HALF_UP — numpy's
+    round is banker's).  No join, no shuffle except the final top-k
+    (``orderBy ... limit`` = TakeOrdered, which holds only k rows per
+    partition).
     """
-    est = _source_row_estimate(embeddings)
-    if est is not None and est[0] <= COSINE_TOPK_HOF_MAX_ROWS:
-        p_lit = F.array(*[F.lit(float(x)) for x in probe])
-        # cast to double BEFORE the fold: the oracles fold over
-        # ::DOUBLE[] (and the Arrow kernel stacks float64), while a
-        # fold over the raw array<float> column multiplies in float
-        # first — a 1-ulp drift that can cross a round(,6) boundary
-        v = F.col(vec_col).cast("array<double>")
-        # degenerate-vector alignment with the batch-kernel branch
-        # (both branches MUST rank identically, the gate picks by row
-        # estimate alone): a zero-norm vector is NULL via try_divide —
-        # a plain `/` RAISES under Spark 4's default ANSI mode where
-        # the kernel branch returns NULL — and a NaN cosine
-        # (NaN-containing vector) becomes NULL exactly like NaN does
-        # crossing Arrow from_pandas in the UDF branch.
-        raw = F.try_divide(_dot(v, p_lit), _norm(v) * _norm(p_lit))
-        # nanvl, not when(~isnan(raw), raw): the HOF fold is interpreted
-        # (no codegen subexpression elimination), so a guard that
-        # references `raw` twice evaluates the whole fold twice —
-        # measured ~2x the query wall.  nanvl evaluates it once and
-        # yields NULL for NaN (second operand NULL), NULL for NULL.
-        cos = F.nanvl(raw, F.lit(None).cast("double"))
-        return (embeddings
-                .select(id_col, F.round(cos, 6).alias("cosine"))
-                .orderBy(F.desc("cosine"), F.col(id_col).asc())
-                .limit(k))
     p = np.asarray(probe, dtype=np.float64)
     pnorm = float(np.sqrt(_seqfold_sqnorms(p[None, :]))[0])
 
@@ -346,33 +313,62 @@ def _probe_dim(embeddings: DataFrame, vec_col: str,
     return len(row[0])
 
 
+def _table_planes(dim: int, n_planes: int, n_tables: int, seed: str
+                  ) -> np.ndarray:
+    """The (n_tables * n_planes, dim) stack of OR-amplified plane sets;
+    table t uses seed ``"{seed}-{t}"``."""
+    return np.concatenate([hyperplanes(dim, n_planes, f"{seed}-{t}")
+                           for t in range(n_tables)])
+
+
+def _sign_buckets(X: np.ndarray, P: np.ndarray, n_planes: int
+                  ) -> np.ndarray:
+    """(n, T) int32 LSH buckets of the rows of ``X`` under the T plane
+    sets stacked in ``P`` (T * n_planes, dim): ONE matmul for every
+    table, bit p of a table's bucket set when the dot with its plane p
+    is >= 0.  The test is written ``not < 0`` so a NaN dot sets the bit,
+    as SQL's ``dot >= 0`` does (Spark and DuckDB order NaN above every
+    double) — the oracles' CASE bucket expressions agree on
+    NaN-containing vectors."""
+    signs = ~((X @ P.T) < 0)
+    B = signs.reshape(len(X), -1, n_planes)
+    return (B * (1 << np.arange(n_planes))).sum(axis=2).astype(np.int32)
+
+
+def _buckets_udf(P: np.ndarray, n_planes: int):
+    """Arrow batch UDF: a vector's array<int> of buckets, one per plane
+    set stacked in ``P`` (_sign_buckets); a NULL array for a NULL or
+    ragged vector, which is un-bucketable."""
+    @F.pandas_udf("array<int>")
+    def buckets_udf(vecs: pd.Series) -> pd.Series:
+        X, valid = _stack_batch(vecs, P.shape[1])
+        if not len(X):
+            return pd.Series([], dtype=object)
+        out = _sign_buckets(X, P, n_planes)
+        return pd.Series([b if ok else None for b, ok in zip(out, valid)])
+
+    return buckets_udf
+
+
 def lsh_assign(embeddings: DataFrame, n_planes: int = 8, seed: str = "nrt",
                vec_col: str = "embedding", id_col: str = "vec_id",
                dim: "int | None" = None) -> DataFrame:
-    """Assign each vector its LSH bucket (int in [0, 2^n_planes)).
-    ``dim`` skips the one-row probe scan (callers with a probe vector
-    know it for free); an all-NULL table degrades to NULL buckets."""
+    """Assign each vector its LSH bucket (int in [0, 2^n_planes)) under
+    the single plane set ``hyperplanes(dim, n_planes, seed)``: the
+    Arrow batch UDF :func:`lsh_multi_assign` runs, over one table.
+    NULL or ragged vectors get a NULL bucket, so a bucket-equality
+    probe drops them (a bucket 0 would return phantom NULL-cosine rows
+    to any probe hashing there).  ``dim`` skips the one-row probe scan
+    (callers with a probe vector know it for free); an all-NULL table
+    degrades to NULL buckets."""
     if dim is None:
         dim = _probe_dim(embeddings, vec_col, required=False)
     if dim is None:
         return embeddings.select(
             id_col, vec_col, F.lit(None).cast("int").alias("bucket"))
-    planes = hyperplanes(dim, n_planes, seed)
-    cast_vec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    bucket = None
-    for p in range(n_planes):
-        plane_col = F.array(*[F.lit(float(x)) for x in planes[p]])
-        dot = _dot(cast_vec, plane_col)
-        # two-sided when, NO otherwise: a NULL dot (NULL or ragged
-        # vector — zip_with pads to NULL) leaves the bit NULL, so the
-        # bucket sum propagates NULL and a bucket-equality probe drops
-        # the row.  An `otherwise(0)` would silently file every NULL
-        # vector in bucket 0, returning phantom NULL-cosine rows to
-        # any probe that hashes there.
-        bit = (F.when(dot >= 0, F.lit(1 << p))
-               .when(dot < 0, F.lit(0)))
-        bucket = bit if bucket is None else bucket + bit
-    return embeddings.select(id_col, vec_col, bucket.alias("bucket"))
+    buckets = _buckets_udf(hyperplanes(dim, n_planes, seed), n_planes)
+    return embeddings.select(id_col, vec_col,
+                             buckets(vec_col)[0].alias("bucket"))
 
 
 #: hash-threshold pre-filter parameters for ivf_train's sample draw.
@@ -574,62 +570,43 @@ def ivf_assign(embeddings: DataFrame, centroids: np.ndarray,
                vec_col: str = "embedding", id_col: str = "vec_id",
                max_inline_cells: int = 32) -> DataFrame:
     """Assign each vector its IVF cell = argmax cosine over centroids
-    (at scale the cell is a partition key).  Two physical strategies,
-    same assignment, both vectorized Arrow batch UDFs:
+    (at scale the cell is a partition key).  One Arrow batch UDF; the
+    cell count picks how it computes norms and similarities:
 
     - ``n_cells <= max_inline_cells``: the sequential-fold kernels
       (_seqfold_dots / _seqfold_sqnorms) — every sim bit-identical to
-      the SQL oracle's per-centroid sequential list fold, which is what
-      the previous pure-Catalyst HOF strategy guaranteed, minus its
-      interpreted per-row lambda cost (the sf100 probe measured the
-      HOF chain at 16 cells x 2M vectors ~30 s; this path ~5 s).
+      the SQL oracle's per-centroid sequential list fold (the sf100
+      probe measured the retired HOF chain at 16 cells x 2M vectors
+      ~30 s; this path ~5 s).
     - larger cell counts: ONE BLAS matmul per batch.  At n_cells=256
       the m-fold dimension loop loses to dgemm, and the fold-order
       guarantee is unnecessary there (the IVF oracle twin recomputes
       assignment with the same matmul).
 
     Ties (exactly equal similarities) resolve to the FIRST maximal cell
-    on both paths (``np.argmax`` takes the first hit, as the retired
-    Catalyst ``array_position`` did); the parity test pins agreement
-    on real data.
+    either way (``np.argmax`` takes the first hit).  Zero-norm, NULL
+    and ragged vectors get a NULL cell.
     """
     C = np.asarray(centroids, dtype=np.float64)
-
-    if len(centroids) <= max_inline_cells:
-        @F.pandas_udf("int")
-        def cell_seq_udf(vecs: pd.Series) -> pd.Series:
-            X, valid = _stack_batch(vecs, C.shape[1])
-            if not len(X):
-                return pd.Series([], dtype="Int32")
-            norms = np.sqrt(_seqfold_sqnorms(X))
-            sims = _seqfold_dots(X, C)
-            with np.errstate(invalid="ignore", divide="ignore"):
-                sims /= norms[:, None]
-            out = pd.array(np.argmax(sims, axis=1).astype(np.int32),
-                           dtype="Int32")
-            # zero-norm vectors: NULL cell (the retired Catalyst path's
-            # try_divide contract; the matmul path mirrors it too).
-            # NULL/ragged vectors: NULL cell, the fold's NULL propagation.
-            out[(norms == 0) | ~valid] = pd.NA
-            return pd.Series(out)
-
-        return embeddings.select(id_col, vec_col,
-                                 cell_seq_udf(vec_col).alias("cell"))
+    seqfold = len(C) <= max_inline_cells
 
     @F.pandas_udf("int")
     def cell_udf(vecs: pd.Series) -> pd.Series:
         X, valid = _stack_batch(vecs, C.shape[1])
         if not len(X):
             return pd.Series([], dtype="Int32")
-        norms = np.sqrt((X * X).sum(axis=1))
-        sims = X @ C.T                       # (n, n_cells), one BLAS call
+        if seqfold:
+            norms = np.sqrt(_seqfold_sqnorms(X))
+            sims = _seqfold_dots(X, C)
+        else:
+            norms = np.sqrt((X * X).sum(axis=1))
+            sims = X @ C.T                   # (n, n_cells), one BLAS call
         with np.errstate(invalid="ignore", divide="ignore"):
             sims /= norms[:, None]
         out = pd.array(np.argmax(sims, axis=1).astype(np.int32),
                        dtype="Int32")
-        # zero-norm vectors: NULL cell, mirroring the sequential-fold
-        # path's contract (and the retired Catalyst try_divide's).
-        # NULL/ragged vectors: NULL cell (fold NULL propagation).
+        # zero-norm, NULL and ragged vectors: NULL cell — argmax over
+        # their NaN/zero-filled row would file them in cell 0
         out[(norms == 0) | ~valid] = pd.NA
         return pd.Series(out)
 
@@ -679,26 +656,12 @@ def lsh_multi_assign(embeddings: DataFrame, n_planes: int = 4,
                 .select(id_col, F.lit(0).cast("int").alias("table_idx"),
                         F.lit(0).cast("int").alias("bucket"))
                 .where(F.lit(False)))
-    P = np.concatenate([hyperplanes(dim, n_planes, f"{seed}-{t}")
-                        for t in range(n_tables)])        # (T*b, dim)
-    weights = (1 << np.arange(n_planes)).astype(np.int64)
-
-    @F.pandas_udf("array<int>")
-    def buckets_udf(vecs: pd.Series) -> pd.Series:
-        X, valid = _stack_batch(vecs, P.shape[1])
-        if not len(X):
-            return pd.Series([], dtype=object)
-        signs = (X @ P.T) >= 0                            # (n, T*b)
-        B = signs.reshape(len(X), n_tables, n_planes)
-        out = (B * weights).sum(axis=2).astype(np.int32)  # (n, T)
-        # NULL/ragged vectors: NULL bucket array -> posexplode emits no
-        # candidate rows for them (un-bucketable, never a pair member)
-        return pd.Series([b if ok else None
-                          for b, ok in zip(out, valid)])
-
+    buckets = _buckets_udf(_table_planes(dim, n_planes, n_tables, seed),
+                           n_planes)
+    # NULL/ragged vectors: NULL bucket array -> posexplode emits no
+    # candidate rows for them (un-bucketable, never a pair member)
     return embeddings.select(
-        id_col, F.posexplode(buckets_udf(vec_col))
-        .alias("table_idx", "bucket"))
+        id_col, F.posexplode(buckets(vec_col)).alias("table_idx", "bucket"))
 
 
 def _lsh_mine_pairs(embeddings: DataFrame, threshold: float,
@@ -821,16 +784,9 @@ def lsh_probe_buckets(probe: list[float], n_planes: int, n_tables: int,
                       seed: str = "nrt") -> list[int]:
     """The probe's bucket id in each of ``n_tables`` plane sets (table t
     uses seed ``"{seed}-{t}"``) — pure numpy, reproducible anywhere."""
-    pv = np.asarray(probe, dtype=np.float64)
-    out = []
-    for t in range(n_tables):
-        planes = hyperplanes(len(probe), n_planes, f"{seed}-{t}")
-        bucket = 0
-        for p in range(n_planes):
-            if float(planes[p] @ pv) >= 0:
-                bucket |= 1 << p
-        out.append(bucket)
-    return out
+    P = _table_planes(len(probe), n_planes, n_tables, seed)
+    pv = np.asarray(probe, dtype=np.float64)[None, :]
+    return _sign_buckets(pv, P, n_planes)[0].tolist()
 
 
 def lsh_topk(embeddings: DataFrame, probe: list[float], k: int = 10,
@@ -849,12 +805,9 @@ def lsh_topk(embeddings: DataFrame, probe: list[float], k: int = 10,
         # probe scan job, and an all-NULL table degrades to empty top-k
         assigned = lsh_assign(embeddings, n_planes, seed, vec_col, id_col,
                               dim=len(probe))
+        pv = np.asarray(probe, dtype=np.float64)[None, :]
         planes = hyperplanes(len(probe), n_planes, seed)
-        probe_bucket = 0
-        pv = np.asarray(probe, dtype=np.float64)
-        for p in range(n_planes):
-            if float(planes[p] @ pv) >= 0:
-                probe_bucket |= 1 << p
+        probe_bucket = int(_sign_buckets(pv, planes, n_planes)[0, 0])
         return cosine_topk(
             assigned.filter(F.col("bucket") == probe_bucket), probe, k,
             vec_col, id_col)

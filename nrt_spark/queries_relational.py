@@ -88,20 +88,9 @@ def top_revenue_orders(spark, sf_dir):
                    * F.round((1 - F.col("l_discount")) * 100).cast("long"))
              .alias("revenue_e4"))
     )
-    # top-k BELOW the join (round-8): revenue and the tiebreak key are
-    # both determined by the lineitem aggregate alone, and the schema
-    # guarantees every l_orderkey resolves in orders against a UNIQUE
-    # o_orderkey (TPC-H referential integrity; verified zero orphans /
-    # zero duplicate keys in the generated tables at every test sf), so
-    # the 1:1 inner join can never drop or reorder a candidate —
-    # TakeOrdered(10) on the compact aggregate first, then a broadcast
-    # join attaches o_orderpriority to ten rows.  This removes the
-    # orders-side exchange and the full-width join that ran before the
-    # top-k (2 Exchange -> 1), which is also the 100-TB-correct shape:
-    # the heavy relation is reduced to k rows before anything joins.
-    top = (li_rev.orderBy(F.desc("revenue_e4"), F.asc("l_orderkey"))
-           .limit(10))
-    return (o.join(F.broadcast(top), o.o_orderkey == top.l_orderkey)
+    # the top-k runs AFTER the join, as in the SQL: an l_orderkey with
+    # no row in orders must not take one of the ten places
+    return (o.join(li_rev, o.o_orderkey == li_rev.l_orderkey)
             .orderBy(F.desc("revenue_e4"), F.asc("o_orderkey")).limit(10)
             .select("o_orderkey", "o_orderpriority", "revenue_e4"))
 

@@ -264,37 +264,54 @@ def test_ivf_topk_recall(spark):
     np.testing.assert_array_equal(C, ivf_train(emb, n_cells=16, iters=8))
 
 
-def test_cosine_topk_hof_and_udf_branches_identical(spark, monkeypatch):
-    """The round-8 row-estimate gate in cosine_topk picks a physical
-    strategy only: the pure-Catalyst HOF fold (small file-backed
-    tables) and the Arrow seqfold UDF must return BIT-IDENTICAL rows,
-    including the tie order."""
+def test_cosine_topk_hof_and_udf_branches_identical(spark, tmp_path):
+    """cosine_topk runs its Arrow batch kernel whatever the table size:
+    on a small file-backed table the executed plan holds
+    ArrowEvalPython, and the top-15 rows — cosines AND tie order — are
+    bit-identical to DuckDB's sequential ``list_dot_product`` fold over
+    the same parquet.  Two copies of sf0.001 (ids offset by 1000) make
+    every cosine a tie, broken by id on both engines."""
+    import duckdb
+
     from nrt_spark.dataops import simsearch as SS
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    path = str(tmp_path / "emb2x.parquet")
+    duckdb.sql(
+        "COPY (SELECT vec_id, embedding FROM "
+        "'/root/testdata/sf0.001/embeddings.parquet' UNION ALL "
+        "SELECT vec_id + 1000, embedding FROM "
+        "'/root/testdata/sf0.001/embeddings.parquet') "
+        f"TO '{path}' (FORMAT PARQUET)")
+    emb = spark.read.parquet(path)
     probe = [float(x) for x in emb.filter("vec_id = 3").first()["embedding"]]
-    hof = SS.cosine_topk(emb, probe, k=15).collect()
-    # file-backed small table -> the HOF branch must actually be taken
-    assert "ArrowEvalPython" not in \
-        SS.cosine_topk(emb, probe, k=15)._jdf.queryExecution() \
-        .executedPlan().toString()
-    monkeypatch.setattr(SS, "COSINE_TOPK_HOF_MAX_ROWS", 0)
-    udf = SS.cosine_topk(emb, probe, k=15).collect()
-    assert [tuple(r) for r in hof] == [tuple(r) for r in udf]
+    top = SS.cosine_topk(emb, probe, k=15)
+    assert "ArrowEvalPython" in \
+        top._jdf.queryExecution().executedPlan().toString()
+    got = [tuple(r) for r in top.collect()]
+    want = duckdb.sql(f"""
+        WITH probe AS (SELECT embedding AS p FROM '{path}' WHERE vec_id = 3)
+        SELECT vec_id,
+               round(list_dot_product(e.embedding::DOUBLE[], p::DOUBLE[])
+                     / (sqrt(list_dot_product(e.embedding::DOUBLE[],
+                                              e.embedding::DOUBLE[]))
+                        * sqrt(list_dot_product(p::DOUBLE[], p::DOUBLE[]))),
+                     6) AS cosine
+        FROM '{path}' e, probe
+        ORDER BY cosine DESC, vec_id LIMIT 15""").fetchall()
+    assert got == want
+    assert got[0] == (3, 1.0) and got[1] == (1003, 1.0)      # a tie
 
 
 def test_cosine_topk_branches_identical_on_degenerate_vectors(
-        spark, tmp_path, monkeypatch):
-    """The gate must be invisible on DEGENERATE rows too: a zero-norm
-    vector (0/0 — raises under ANSI without try_divide), a
-    NaN-containing vector (NaN sorts FIRST desc, NULL sorts LAST — a
-    silent top-k flip if the branches disagree), a NULL vector and a
-    ragged vector must all come out NULL cosine on BOTH branches."""
+        spark, tmp_path):
+    """Degenerate rows through the batch kernel: a zero-norm vector
+    (0/0), a NaN-containing vector (a NaN cosine would sort FIRST
+    desc), a NULL vector and a ragged vector all get a NULL cosine and
+    rank after the two real matches."""
     from pyspark.sql.types import (ArrayType, FloatType, LongType,
                                    StructField, StructType)
     from nrt_spark.dataops import simsearch as SS
 
-    dim = 4
     rows = [
         (1, [1.0, 2.0, 3.0, 4.0]),
         (2, [0.0, 0.0, 0.0, 0.0]),            # zero norm
@@ -309,14 +326,47 @@ def test_cosine_topk_branches_identical_on_degenerate_vectors(
     path = str(tmp_path / "deg_emb")
     spark.createDataFrame(rows, schema).write.parquet(path)
     emb = spark.read.parquet(path)
-    probe = [1.0, 2.0, 3.0, 4.0]
-    hof = SS.cosine_topk(emb, probe, k=6).collect()
-    monkeypatch.setattr(SS, "COSINE_TOPK_HOF_MAX_ROWS", 0)
-    udf = SS.cosine_topk(emb, probe, k=6).collect()
-    assert [tuple(r) for r in hof] == [tuple(r) for r in udf]
-    # the degenerate rows rank LAST (NULL cosine) on both branches
-    assert [r["vec_id"] for r in hof][:2] == [1, 6]
-    assert all(r["cosine"] is None for r in hof[2:])
+    got = [tuple(r) for r in
+           SS.cosine_topk(emb, [1.0, 2.0, 3.0, 4.0], k=6).collect()]
+    assert got[:2] == [(1, 1.0), (6, 0.666667)]
+    assert sorted(got[2:]) == [(2, None), (3, None), (4, None), (5, None)]
+
+
+def test_lsh_assign_buckets_are_packed_sign_bits(spark):
+    """lsh_assign (single plane set, seed "nrt", 8 planes) files every
+    sf0.001 vector in the bucket numpy packs from ``X @ P.T >= 0``
+    (bit p weighted 1 << p), through an Arrow batch UDF with no HOF
+    dot fold in the plan.  A NaN-containing vector sets every bit, as
+    the SQL oracles' ``CASE WHEN dot >= 0`` does (NaN orders above
+    every double in Spark and DuckDB)."""
+    import duckdb
+
+    from nrt_spark.dataops import simsearch as SS
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    assigned = SS.lsh_assign(emb, n_planes=8, seed="nrt")
+    plan = assigned._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" in plan
+    assert "aggregate(" not in plan and "zip_with" not in plan
+    got = {r["vec_id"]: r["bucket"]
+           for r in assigned.select("vec_id", "bucket").collect()}
+    tbl = duckdb.sql("SELECT vec_id, embedding FROM "
+                     "'/root/testdata/sf0.001/embeddings.parquet'").df()
+    X = np.asarray([np.asarray(v, np.float64) for v in tbl["embedding"]])
+    P = SS.hyperplanes(X.shape[1], 8, "nrt")
+    want = ((X @ P.T >= 0) * (1 << np.arange(8))).sum(axis=1)
+    assert got == dict(zip(tbl["vec_id"].tolist(), want.tolist()))
+    assert len(set(want.tolist())) > 100              # not a constant
+
+    nan_vec = spark.createDataFrame(
+        [(1, [float("nan"), 1.0, 1.0, 1.0])],
+        "vec_id long, embedding array<double>")
+    assert SS.lsh_assign(nan_vec, n_planes=3, dim=4).first()["bucket"] == 7
+    assert {r["bucket"] for r in SS.lsh_multi_assign(
+        nan_vec, n_planes=3, n_tables=2, dim=4).collect()} == {7}
+    assert duckdb.sql(
+        "SELECT list_dot_product(['nan'::DOUBLE, 1, 1, 1], [1.0, 2, 3, 4])"
+        " >= 0").fetchone()[0] is True
 
 
 def test_lsh_neardup_recall_vs_brute(spark):
@@ -859,9 +909,9 @@ def test_null_and_ragged_embeddings_propagate_null(spark):
     assert per_id == {"a", "b"}, (
         "un-bucketable NULL/ragged vectors must emit no candidate rows")
 
-    # the Catalyst single-table assign must NULL-propagate too: an
-    # otherwise(0) bit would file every NULL/ragged vector in bucket 0
-    # and leak phantom rows to any probe hashing there
+    # the single-table assign must NULL-propagate too: a bucket 0
+    # would file every NULL/ragged vector together and leak phantom
+    # rows to any probe hashing there
     from nrt_spark.dataops.simsearch import lsh_assign
 
     buckets = {r["vec_id"]: r["bucket"]

@@ -202,3 +202,38 @@ def test_collapsed_branch_matches_oracle_on_duplicated_corpus(
             else:
                 mism = (got[c].to_numpy() != want[c].to_numpy())
                 assert not mism.any(), f"{name}.{c}: {mism.sum()} mismatches"
+
+
+def test_top_revenue_orders_skips_orphan_lineitems(spark, tmp_path):
+    """An l_orderkey with no row in orders cannot take one of the ten
+    places: its revenue is the highest of all, yet top_revenue_orders
+    returns the ten best JOINED orders, equal to the DuckDB oracle.  A
+    top-k taken below the join returned only 9 rows here."""
+    src = "/root/testdata/sf0.001"
+    con = duckdb.connect()
+    con.sql(f"COPY (SELECT * FROM '{src}/orders.parquet') "
+            f"TO '{tmp_path}/orders.parquet' (FORMAT PARQUET)")
+    con.sql(f"""
+        COPY (SELECT * FROM '{src}/lineitem.parquet'
+              UNION ALL
+              SELECT * REPLACE (l_orderkey + 1000000000 AS l_orderkey,
+                                l_extendedprice * 1000 AS l_extendedprice)
+              FROM (SELECT * FROM '{src}/lineitem.parquet'
+                    ORDER BY l_orderkey, l_linenumber LIMIT 1))
+        TO '{tmp_path}/lineitem.parquet' (FORMAT PARQUET)""")
+    for t in ("orders", "lineitem"):
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM "
+                f"'{tmp_path}/{t}.parquet'")
+    orphan = con.sql(
+        "SELECT l_orderkey FROM lineitem ANTI JOIN orders "
+        "ON l_orderkey = o_orderkey").fetchall()
+    top_key = con.sql(
+        "SELECT l_orderkey FROM lineitem GROUP BY l_orderkey "
+        "ORDER BY sum(l_extendedprice * (1 - l_discount)) DESC "
+        "LIMIT 1").fetchall()
+    assert len(orphan) == 1 and top_key == orphan
+    got = [tuple(r) for r in
+           Q.top_revenue_orders(spark, str(tmp_path)).collect()]
+    want = con.sql(Q.SUB_SQL["top_revenue_orders"]).fetchall()
+    assert len(got) == 10
+    assert got == [tuple(r) for r in want]

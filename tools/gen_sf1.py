@@ -13,10 +13,10 @@ what matters is determinism and FK consistency:
   exactly as they do at sf0.1;
 - region/nation stay as-is (dimension tables, already referenced by
   unchanged nationkey columns);
-- text/embedding payloads are NOT perturbed: replicas are exact
-  duplicates, which deliberately stresses the dedup/ANN surface
-  (cross-replica duplicate groups, cosine==1 ties — broken by id on
-  both engines).  NOTE: 20k vectors is still BELOW ivf_train's
+- text/embedding payloads are NOT perturbed: every replica duplicates
+  every text and every vector exactly, which deliberately stresses the
+  dedup/ANN surface (cross-replica duplicate groups, cosine==1 ties —
+  broken by id on both engines).  NOTE: 20k vectors is still BELOW ivf_train's
   hash-threshold sample cutoff (4x the 10k default sample), so the
   dry pass exercises the unfiltered IVF branch; the filtered branch
   is covered by tests/test_dataops.py::test_ivf_train_hash_sample_path.
